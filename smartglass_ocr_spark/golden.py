@@ -45,6 +45,19 @@ def process_span(kind: str, text: str | None) -> tuple[str, str | None]:
     return block_class, clean_for_class(block_class, text or "")
 
 
+def extract_class(class_hist: dict[str, int]) -> str:
+    """The block class that drives structured extraction for a doc
+    (ref dispatcher lib/information_extraction.py:28-53 keyed by
+    ImageType; our doc analogue): the most frequent special block
+    class, ties broken by the fixed order id_card > receipt > form >
+    table, else ``"content"`` when the doc has no special span."""
+    dominant = max(
+        _SPECIAL_CLASSES,
+        key=lambda c: (class_hist.get(c, 0), -_SPECIAL_CLASSES.index(c)),
+    )
+    return dominant if class_hist.get(dominant, 0) > 0 else "content"
+
+
 def truncate_doc_spans(
     spans: list[dict],
     max_spans: int | None = None,
@@ -132,15 +145,7 @@ def document_metadata(
     # (:1212-1228) — consumes the FORMATTED text.
     formatted_text = format_text(doc_text)
 
-    # dominant special class drives extraction (ref dispatcher
-    # lib/information_extraction.py:28-53 keyed by ImageType; our doc
-    # analogue: the most frequent special block class, ties broken by
-    # the fixed order id_card > receipt > form > table)
-    dominant = max(
-        _SPECIAL_CLASSES,
-        key=lambda c: (class_hist.get(c, 0), -_SPECIAL_CLASSES.index(c)),
-    )
-    extract_class = dominant if class_hist.get(dominant, 0) > 0 else "content"
+    extraction_class = extract_class(class_hist)
 
     # confidence is the extraction-time score (the reference's is
     # engine-derived, computed before formatting) — fed the pre-format
@@ -165,11 +170,11 @@ def document_metadata(
         # (ref lib/smartglass_ocr.py:1222)
         "structure": detect_structure(formatted_text),
         "block_class_hist": class_hist,
-        "structured_info": extract_structured(extract_class, formatted_text),
+        "structured_info": extract_structured(extraction_class, formatted_text),
         # typed nested twin (receipt items array<struct>, table
         # headers/rows — the reference's actual JSON shapes); None
         # for classes whose reference output is a flat map anyway
-        "structured_typed": extract_structured_typed(extract_class, formatted_text),
+        "structured_typed": extract_structured_typed(extraction_class, formatted_text),
         "summary": summary,
         "key_insights": key_insights,
         "confidence": confidence,

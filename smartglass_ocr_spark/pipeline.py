@@ -1,38 +1,38 @@
 """The Spark extraction pipeline (SURVEY.md §7.1 slice, widened).
 
-Stages over ``documents(doc_id, spans array<struct<kind,text,
-media_ref,offset>>)``:
+One document pipeline over ``documents(doc_id, spans array<struct<
+kind,text,media_ref,offset>>)`` or their exploded span rows:
 
-1. ``explode_spans``     — ``inline(spans)``: one narrow stage.
-2. ``classify_and_clean``— ONE Arrow-batched pandas UDF computing
-   (block_class, clean_text); media rows pass through inside the
-   batch (single scan — no filter/union double-read of the source).
-3. ``reassemble``        — groupBy(doc_id) +
-   ``array_sort(collect_list(struct(offset, ...)))``: the W1
-   window-reassembly shuffle. ``two_phase=True`` adds a segment-level
-   pre-assembly keyed by ``offset // segment`` so a mega-document's
-   spans are combined in bounded chunks before the final per-doc merge
-   (SURVEY.md §4 skew plan).
-4. ``with_doc_metadata`` — per-doc derived columns (lang, structure,
-   summary, insights, confidence, status, structured_info) via a
-   second pandas UDF over the assembled doc text.
+1. ``explode_spans``   — ``inline(spans)``: one narrow stage.
+2. ``reassemble_raw``  — groupBy(doc_id) + ``collect_list`` of the raw
+   spans: the pipeline's one shuffle.
+3. ``fused_doc_stage`` — ONE ``mapInPandas`` crossing that runs the
+   golden spec (``golden.process_document``) per document: per-span
+   classify/clean, offset order and every per-doc metadata column.
 
-Per-span semantics = ``smartglass_ocr_spark.golden`` (the executable
-spec); reference citations live in the rules modules.
+:func:`run_pipeline_fused` chains 2-3. :func:`run_pipeline_skew_routed`
+is its mega-document variant: heavy docs get their per-span
+classify/clean distributed (:func:`classify_and_clean`) and only the
+per-doc tail (``golden.document_metadata``) runs per doc.
+:func:`extracted_span_rows` is the flat per-span view.
+
+Per-span semantics = ``golden.process_span``, per-doc semantics =
+``golden.document_metadata`` (the executable spec); reference
+citations live in the rules modules.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, MapType, StringType, StructField,
     StructType,
 )
 
-from smartglass_ocr_spark.corpus import SPAN_STRUCT
-
-SEGMENT_SPANS = 65536  # two-phase reassembly segment width (offsets)
+# largest mega-doc id set the skew router broadcasts; past it the
+# routing flag is a shuffle join, never an unbounded collect()
+MAX_BROADCAST_MEGA_IDS = 1_000_000
 
 _CLASSIFY_SCHEMA = StructType(
     [
@@ -102,68 +102,6 @@ _TYPED_INFO_TYPE = StructType(
     ]
 )
 
-_META_SCHEMA = StructType(
-    [
-        StructField("formatted_text", StringType()),
-        StructField("lang", StringType()),
-        StructField("structure", StringType()),
-        StructField("structured_info", MapType(StringType(), StringType())),
-        StructField("structured_typed", _TYPED_INFO_TYPE),
-        StructField("summary", StringType()),
-        StructField("key_insights", ArrayType(StringType())),
-        StructField("confidence", DoubleType()),
-        StructField("confidence_level", StringType()),
-        StructField("status", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_META_SCHEMA)
-def _doc_meta_udf(doc_text: pd.Series, class_hist: pd.Series) -> pd.DataFrame:
-    # mirrors golden.process_document's doc-metadata block exactly
-    # (the fused pipeline runs the golden spec itself; this staged twin
-    # must stay in lockstep — tests assert bit-equality of the two)
-    from smartglass_ocr_spark.rules.confidence import status_for, weighted_confidence
-    from smartglass_ocr_spark.rules.extract import (
-        confidence_level, extract_structured, extract_structured_typed,
-    )
-    from smartglass_ocr_spark.rules.format import format_text
-    from smartglass_ocr_spark.rules.langdetect import detect_language
-    from smartglass_ocr_spark.rules.structure import detect_structure
-    from smartglass_ocr_spark.rules.summarize import extract_key_insights, generate_summary
-
-    special = ("id_card", "receipt", "form", "table")
-    rows = []
-    for text, hist in zip(doc_text, class_hist):
-        text = text or ""
-        hist = hist or {}
-        formatted = format_text(text)
-        dominant = max(special, key=lambda c: (hist.get(c, 0), -special.index(c)))
-        extract_class = dominant if hist.get(dominant, 0) else "content"
-        confidence = weighted_confidence(text)
-        status = status_for(confidence, formatted)
-        summary = ""
-        insights: list[str] = []
-        if status in ("success", "partial_success") and formatted:
-            summary = generate_summary(formatted)
-            if len(formatted) > 200:
-                insights = extract_key_insights(formatted)
-        rows.append(
-            {
-                "formatted_text": formatted,
-                "lang": detect_language(formatted),
-                "structure": detect_structure(formatted),
-                "structured_info": extract_structured(extract_class, formatted),
-                "structured_typed": extract_structured_typed(extract_class, formatted),
-                "summary": summary,
-                "key_insights": insights,
-                "confidence": confidence,
-                "confidence_level": confidence_level(confidence),
-                "status": status,
-            }
-        )
-    return pd.DataFrame(rows)
-
 
 def explode_spans(documents: DataFrame) -> DataFrame:
     """spans array -> one row per span (narrow; generator exec)."""
@@ -180,106 +118,6 @@ def classify_and_clean(span_rows: DataFrame) -> DataFrame:
         "offset",
         F.col("_cc.block_class").alias("block_class"),
         F.col("_cc.clean_text").alias("text"),
-    )
-
-
-def _ordered_span_struct() -> Column:
-    # offset leads so the binary struct comparison of array_sort is
-    # exactly "order by offset" (offsets are unique within a doc)
-    return F.struct("offset", "kind", "text", "media_ref")
-
-
-def _restore_field_order(sorted_col: Column) -> Column:
-    return F.transform(
-        sorted_col,
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-
-
-def reassemble(span_rows: DataFrame, two_phase: bool = False,
-               segment_spans: int = SEGMENT_SPANS) -> DataFrame:
-    """W1 ordered reassembly: doc_id -> spans sorted by offset, plus
-    block_class_hist (the per-doc class histogram used downstream).
-
-    Single-phase: one hash-partial collect_list shuffle on doc_id.
-    Two-phase: pre-assemble per (doc_id, offset // segment_spans) so no
-    single task materializes a mega-doc's full span list during the
-    shuffle sort; the second, far smaller shuffle merges ~n/segment
-    pre-sorted chunks per doc.
-    """
-    def hist_of(classes: Column) -> Column:
-        # fold the class list into a count map, JVM-side
-        return F.aggregate(
-            classes,
-            F.create_map().cast("map<string,int>"),
-            lambda acc, c: F.map_zip_with(
-                acc,
-                F.create_map(c, F.lit(1)),
-                lambda _, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0)),
-            ),
-        )
-
-    if not two_phase:
-        grouped = span_rows.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(_ordered_span_struct())).alias("_sorted"),
-            hist_of(F.collect_list("block_class")).alias("block_class_hist"),
-        )
-        return grouped.select(
-            "doc_id",
-            _restore_field_order(F.col("_sorted")).alias("spans"),
-            "block_class_hist",
-        )
-
-    seg = span_rows.withColumn(
-        "_seg", F.floor(F.col("offset") / F.lit(segment_spans)).cast("int")
-    )
-    stage1 = seg.groupBy("doc_id", "_seg").agg(
-        F.array_sort(F.collect_list(_ordered_span_struct())).alias("_seg_spans"),
-        F.count(F.lit(1)).alias("_n"),
-        F.collect_list("block_class").alias("_classes"),
-    )
-    stage2 = stage1.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_seg", "_seg_spans"))),
-                lambda x: x["_seg_spans"],
-            )
-        ).alias("_sorted"),
-        hist_of(F.flatten(F.collect_list("_classes"))).alias("block_class_hist"),
-    )
-    return stage2.select(
-        "doc_id",
-        _restore_field_order(F.col("_sorted")).alias("spans"),
-        "block_class_hist",
-    )
-
-
-def with_doc_metadata(reassembled: DataFrame) -> DataFrame:
-    """Adds the per-doc derived columns (FIXTURES.md §3)."""
-    texts = F.transform("spans", lambda s: s["text"])
-    doc_text = F.array_join(
-        F.filter(texts, lambda t: t.isNotNull() & (t != F.lit(""))), "\n\n"
-    )
-    meta = _doc_meta_udf(doc_text, F.col("block_class_hist"))
-    return reassembled.withColumn("_m", meta).select(
-        "doc_id",
-        "spans",
-        "block_class_hist",
-        F.col("_m.formatted_text").alias("formatted_text"),
-        F.col("_m.lang").alias("lang"),
-        F.col("_m.structure").alias("structure"),
-        F.col("_m.structured_info").alias("structured_info"),
-        F.col("_m.structured_typed").alias("structured_typed"),
-        F.col("_m.summary").alias("summary"),
-        F.col("_m.key_insights").alias("key_insights"),
-        F.col("_m.confidence").alias("confidence"),
-        F.col("_m.confidence_level").alias("confidence_level"),
-        F.col("_m.status").alias("status"),
     )
 
 
@@ -311,34 +149,15 @@ _DOC_OUT_SCHEMA = StructType(
 )
 
 
-def reassemble_raw(span_rows: DataFrame, two_phase: bool = False,
-                   segment_spans: int = SEGMENT_SPANS) -> DataFrame:
+def reassemble_raw(span_rows: DataFrame) -> DataFrame:
     """Collect each doc's RAW spans into one array — unsorted: the
     fused doc stage sorts by offset in Python (cheaper than a JVM
     array_sort + field-reorder round trip). This is the pipeline's
     single wide operation; when the input is already hash-partitioned
     by doc_id (or derived narrowly from doc-shaped rows, which
-    Generate preserves), EnsureRequirements inserts NO exchange.
-
-    ``two_phase``: mega-doc skew path — pre-collect per
-    (doc_id, offset // segment_spans) so no single shuffle-map task
-    buffers a mega-doc's full span list; the second agg merges a few
-    hundred segment arrays per doc. (The final per-doc row is still
-    whole — a doc must fit an executor either way; two-phase bounds
-    the *shuffle* memory, same as the staged pipeline's plan.)"""
-    span_struct = F.struct("kind", "text", "media_ref", "offset")
-    if not two_phase:
-        return span_rows.groupBy("doc_id").agg(
-            F.collect_list(span_struct).alias("spans")
-        )
-    seg = span_rows.withColumn(
-        "_seg", F.floor(F.col("offset") / F.lit(segment_spans)).cast("int")
-    )
-    stage1 = seg.groupBy("doc_id", "_seg").agg(
-        F.collect_list(span_struct).alias("_seg_spans")
-    )
-    return stage1.groupBy("doc_id").agg(
-        F.flatten(F.collect_list("_seg_spans")).alias("spans")
+    Generate preserves), EnsureRequirements inserts NO exchange."""
+    return span_rows.groupBy("doc_id").agg(
+        F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias("spans")
     )
 
 
@@ -348,7 +167,7 @@ def fused_doc_stage(assembled: DataFrame,
     """classify + clean + reassembly-order + all doc metadata in ONE
     Arrow round trip per batch of whole documents, by running the
     golden executable spec (`golden.process_document`) directly —
-    output equality with the staged pipeline is by construction.
+    output equality with the spec is by construction.
 
     Why fused: ArrowEvalPython does not propagate outputPartitioning,
     so any pandas-UDF stage *before* the reassembly groupBy forces a
@@ -403,21 +222,25 @@ def fused_doc_stage(assembled: DataFrame,
 
 def run_pipeline_fused(span_rows: DataFrame,
                        partitions: int | None = None,
-                       two_phase: bool = False,
                        max_doc_spans: int | None = None,
                        max_doc_bytes: int | None = None) -> DataFrame:
-    """Optimized end-to-end pipeline: ONE shuffle (raw-span
-    reassembly), ONE Arrow crossing (fused classify/clean/meta).
-    Bit-identical output to ``run_pipeline_rows(with_metadata=True)``
-    (asserted in tests). Use the staged pipeline when intermediate
-    span rows are needed relationally; use this for throughput.
-    ``two_phase`` enables the mega-doc segment pre-assembly;
+    """End-to-end pipeline from span rows (doc_id, kind, text,
+    media_ref, offset): ONE shuffle (raw-span reassembly), ONE Arrow
+    crossing (fused classify/clean/meta); output rows equal
+    ``golden.process_document`` per doc (asserted in tests).
+
+    ``partitions``: hash-repartition by doc_id up front. Set this when
+    the source arrives in too few splits (small files, a crossJoin-
+    replicated input, a single kafka partition): the reassembly
+    groupBy reuses the hash partitioning, so the repartition replaces
+    — not adds to — the aggregation shuffle. Leave None when the scan
+    already yields enough splits (parquet row-group splits).
     ``max_doc_spans``/``max_doc_bytes`` cap per-doc work (see
     :func:`fused_doc_stage`)."""
     if partitions:
         span_rows = span_rows.repartition(partitions, "doc_id")
     return fused_doc_stage(
-        reassemble_raw(span_rows, two_phase=two_phase),
+        reassemble_raw(span_rows),
         max_doc_spans=max_doc_spans,
         max_doc_bytes=max_doc_bytes,
     )
@@ -428,38 +251,33 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
                              partitions: int | None = None) -> DataFrame:
     """Mega-doc straggler mitigation, LOSSLESS (r2 VERDICT #3): docs
     at or under ``mega_doc_spans`` spans take the fused one-exchange
-    path; heavier docs are routed through the STAGED path, where the
-    dominant per-doc cost — per-span classify/clean, ~0.7 ms/span, so
-    a 200k-span doc is ~2 min of Python in ONE fused task — runs
-    distributed across the cluster (a round-robin repartition spreads
-    the mega spans; the two-phase re-assembly shuffle touches only
-    the mega subset). Output is bit-identical to the fused path
-    (asserted in tests): per-span classification is context-free and
-    the staged metadata stage is in lockstep with the golden spec.
+    path; heavier docs take a mega branch where the dominant per-doc
+    cost — per-span classify/clean, ~0.7 ms/span, so a 200k-span doc
+    is ~2 min of Python in ONE fused task — runs distributed across
+    the cluster. Output is bit-identical to the fused path (asserted
+    in tests): per-span classification is context-free and both
+    branches end in the same ``golden.document_metadata``.
 
     Routing: one cheap partial-combining count agg finds the mega
-    doc_ids (compact (doc_id, n) rows); the — by definition of a
-    heavy TAIL — small id set is persisted (it is tiny and both
-    branch plans reference it; the cache lives for the session, the
-    caller-owned-unpersist contract) and BROADCAST-joined back as a
-    routing flag (r4 VERDICT #2: the former collected-``isin`` form
-    shipped up to 100k id literals in every task closure of both
-    branches and needed a hard ``max_mega_docs`` ceiling; the join
-    form has no driver collect, no closure payload, and no ceiling),
-    so each branch shuffles only its own subset exactly once and no
-    exchange-reuse gamble is taken (r2 finding: AQE does not reuse
-    union-branch exchanges). A NULL ``doc_id`` never matches the
-    join key, so such rows fall through to the small branch exactly
-    as the old ``coalesce(isin, False)`` routing sent them (pinned
-    in tests). The mega branch is: round-robin spread
-    -> Arrow classify/clean -> ``applyInPandas`` per doc running only
-    the per-doc metadata tail (``golden.document_metadata``) —
-    deliberately NOT the staged ``reassemble``/``with_doc_metadata``
-    pair (interpreted HOF hist-fold + field-reorder lambdas cost more
-    per mega span than the classification they save), and not a JVM
-    ``collect_list`` either (flat columnar Arrow transfer into the
-    grouped pandas stage benched ~15% faster than building the span
-    structs JVM-side and converting the nested array).
+    doc_ids; at most ``MAX_BROADCAST_MEGA_IDS + 1`` of them are
+    collected. None -> plain fused path. Up to the gate (by definition
+    of a heavy TAIL, the usual case) the ids become a local frame
+    BROADCAST-joined back as a routing flag, so each branch shuffles
+    only its own subset exactly once (r2 finding: AQE does not reuse
+    union-branch exchanges) and nothing is cached. Past the gate — a
+    mis-set threshold catching millions of "megas" — the flag is a
+    shuffle join on the agg itself: no unbounded collect(), no
+    ceiling error. A NULL ``doc_id`` never matches the join key, so
+    such rows fall through to the small branch, where the fused
+    groupBy keeps them as one group exactly like an unrouted run
+    (pinned in tests).
+
+    The mega branch is: round-robin spread -> Arrow classify/clean
+    (:func:`classify_and_clean`) -> ``applyInPandas`` per doc running
+    only the per-doc metadata tail. Flat columnar Arrow transfer into
+    the grouped pandas stage benched ~15% faster than building the
+    span structs JVM-side with ``collect_list`` and converting the
+    nested array.
 
     The residual serial floor per mega-doc is the per-doc metadata
     pass (format/structure/summary — linear passes over the joined
@@ -472,32 +290,19 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > mega_doc_spans)
         .select("doc_id")
-        .persist()
     )
-    # the count() both answers "any megas at all?" and eagerly fills
-    # the cache so the agg over span_rows runs ONCE, not once per
-    # branch plan (AQE does not reuse union-branch exchanges)
-    n_mega = mega_ids.count()
-    if n_mega == 0:
-        mega_ids.unpersist()
+    ids = mega_ids.limit(MAX_BROADCAST_MEGA_IDS + 1).collect()
+    if not ids:
         return run_pipeline_fused(span_rows)
-    # NULL-SAFE routing: a NULL doc_id never matches the broadcast
-    # join key, leaves _mega NULL, and coalesce(False) sends the row
-    # to the small branch, where the fused groupBy keeps such rows as
-    # one group exactly like an unrouted run would (r3 ADVICE).
-    # The broadcast hint is gated on the measured id count: a mis-set
-    # threshold that catches tens of millions of "megas" must degrade
-    # to a shuffle join, not force an unbounded driver collect (the
-    # old ceiling's failure mode without its hard error).
-    flag = mega_ids.withColumn("_mega", F.lit(True))
-    if n_mega <= 10_000_000:
-        flag = F.broadcast(flag)
-    routed = span_rows.join(flag, "doc_id", "left")
+    spark = span_rows.sparkSession
+    if len(ids) <= MAX_BROADCAST_MEGA_IDS:
+        mega_ids = F.broadcast(spark.createDataFrame(ids, mega_ids.schema))
+    routed = span_rows.join(mega_ids.withColumn("_mega", F.lit(True)), "doc_id", "left")
     is_mega = F.coalesce(F.col("_mega"), F.lit(False))
     small_out = run_pipeline_fused(
         routed.filter(~is_mega).select(*span_rows.columns)
     )
-    n_parts = span_rows.sparkSession.sparkContext.defaultParallelism
+    n_parts = spark.sparkContext.defaultParallelism
     cleaned = classify_and_clean(
         routed.filter(is_mega).select(*span_rows.columns).repartition(n_parts)
     )
@@ -541,17 +346,13 @@ def with_organized_text(pipeline_out: DataFrame) -> DataFrame:
     path (same pattern as :func:`with_markdown`)."""
 
     def run(batches):
+        from smartglass_ocr_spark.golden import extract_class
         from smartglass_ocr_spark.rules.format import organize_text
 
-        special = ("id_card", "receipt", "form", "table")
         for pdf in batches:
             organized = []
             for row in pdf.to_dict("records"):
-                hist = row.get("block_class_hist") or {}
-                dominant = max(
-                    special, key=lambda c: (hist.get(c, 0), -special.index(c))
-                )
-                cls = dominant if hist.get(dominant, 0) else "content"
+                cls = extract_class(row.get("block_class_hist") or {})
                 organized.append(organize_text(row.get("formatted_text") or "", cls))
             pdf = pdf.copy()
             pdf["organized_text"] = organized
@@ -582,40 +383,6 @@ def with_markdown(pipeline_out: DataFrame) -> DataFrame:
 
     schema = StructType(pipeline_out.schema.fields + [StructField("markdown", StringType())])
     return pipeline_out.mapInPandas(run, schema)
-
-
-def run_pipeline_rows(span_rows: DataFrame, two_phase: bool = False,
-                      with_metadata: bool = True,
-                      partitions: int | None = None) -> DataFrame:
-    """Pipeline from already-exploded span rows (doc_id, kind, text,
-    media_ref, offset) -> cleaned + reassembled (+ metadata) output.
-    Start here when the source is row-shaped (e.g.
-    :func:`~smartglass_ocr_spark.corpus.span_rows_from_flat`) — it
-    skips the array build + explode round trip.
-
-    ``partitions``: hash-repartition by doc_id up front. Set this when
-    the source arrives in too few splits (small files, a crossJoin-
-    replicated input, a single kafka partition): the pandas-UDF stages
-    then run at full parallelism AND the reassembly groupBy reuses the
-    hash partitioning, so the repartition replaces — not adds to — the
-    aggregation shuffle. Leave None when the scan already yields
-    enough splits (the 100 TB case: parquet row-group splits)."""
-    if partitions:
-        span_rows = span_rows.repartition(partitions, "doc_id")
-    cleaned = classify_and_clean(span_rows)
-    out = reassemble(cleaned, two_phase=two_phase)
-    if with_metadata:
-        out = with_doc_metadata(out)
-    return out
-
-
-def run_pipeline(documents: DataFrame, two_phase: bool = False,
-                 with_metadata: bool = True) -> DataFrame:
-    """documents(doc_id, spans array) -> cleaned + reassembled
-    (+ metadata) output."""
-    return run_pipeline_rows(
-        explode_spans(documents), two_phase=two_phase, with_metadata=with_metadata
-    )
 
 
 def extracted_span_rows(documents: DataFrame | None = None,

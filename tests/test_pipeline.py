@@ -4,8 +4,8 @@ The Spark pipeline's output must match the pure-Python golden
 generator per document: span-sequence equality
 (kind, text, media_ref, order) — BASELINE.json north_rule — plus the
 invariants: span-count conservation, media byte-identity, offset
-monotonicity, input-order permutation invariance, and single-phase ==
-two-phase (skew path) equivalence.
+monotonicity, input-order permutation invariance, and skew-routed ==
+fused equivalence.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import pytest
 
 from smartglass_ocr_spark.corpus import docs_to_df, generate_docs
 from smartglass_ocr_spark.golden import golden_outputs
-from smartglass_ocr_spark.pipeline import run_pipeline
+from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +29,7 @@ def golden(docs):
 
 @pytest.fixture(scope="module")
 def spark_result(spark, docs):
-    rows = run_pipeline(docs_to_df(spark, docs), with_metadata=True).collect()
+    rows = run_pipeline_fused(explode_spans(docs_to_df(spark, docs))).collect()
     return {r["doc_id"]: r for r in rows}
 
 
@@ -98,33 +98,9 @@ def test_permutation_invariance(spark, docs, spark_result):
         spans = list(d["spans"])
         rng.shuffle(spans)
         shuffled.append({"doc_id": d["doc_id"], "spans": spans})
-    rows = run_pipeline(docs_to_df(spark, shuffled), with_metadata=False).collect()
+    rows = run_pipeline_fused(explode_spans(docs_to_df(spark, shuffled))).collect()
     for r in rows:
         assert _span_seq(r["spans"]) == _span_seq(spark_result[r["doc_id"]]["spans"])
-
-
-def test_two_phase_reassembly_equivalence(spark, docs, golden):
-    """Salted/segmented skew path produces byte-identical output,
-    including for a pinned mega-doc (segment width forced tiny so the
-    test corpus actually crosses segment boundaries)."""
-    mega = generate_docs(n_docs=10, seed=99, scramble=True, mega_doc_spans=500)
-    df = docs_to_df(spark, mega)
-    single = {
-        r["doc_id"]: r
-        for r in run_pipeline(df, two_phase=False, with_metadata=False).collect()
-    }
-    from smartglass_ocr_spark.pipeline import classify_and_clean, explode_spans, reassemble
-
-    two = {
-        r["doc_id"]: r
-        for r in reassemble(
-            classify_and_clean(explode_spans(df)), two_phase=True, segment_spans=64
-        ).collect()
-    }
-    assert set(single) == set(two)
-    for doc_id in single:
-        assert _span_seq(single[doc_id]["spans"]) == _span_seq(two[doc_id]["spans"])
-        assert dict(single[doc_id]["block_class_hist"]) == dict(two[doc_id]["block_class_hist"])
 
 
 def test_empty_and_single_span_docs(spark):
@@ -132,31 +108,35 @@ def test_empty_and_single_span_docs(spark):
         {"doc_id": "d-single", "spans": [{"kind": "para", "text": "ofthe thing works.", "media_ref": None, "offset": 0}]},
         {"doc_id": "d-media-only", "spans": [{"kind": "image", "text": None, "media_ref": "m-abc", "offset": 3}]},
     ]
-    got = {r["doc_id"]: r for r in run_pipeline(docs_to_df(spark, docs)).collect()}
+    got = {
+        r["doc_id"]: r
+        for r in run_pipeline_fused(explode_spans(docs_to_df(spark, docs))).collect()
+    }
     g = {x["doc_id"]: x for x in golden_outputs(docs)}
     for doc_id in g:
         assert _span_seq(got[doc_id]["spans"]) == _span_seq(g[doc_id]["spans"])
 
 
-def test_fused_pipeline_equals_staged(spark):
-    """run_pipeline_fused (one shuffle, one Arrow crossing) must be
-    bit-identical to the staged explode->classify->reassemble->meta
-    pipeline across every output column, including nested spans,
-    hist maps and metadata."""
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+def test_fused_pipeline_equals_golden_rows(spark):
+    """run_pipeline_fused (one shuffle, one Arrow crossing) must equal
+    the golden spec row for row across every output column — nested
+    spans, structured_typed, hist maps including their key order, and
+    confidence compared exactly."""
+    from pyspark.sql import functions as F
 
-    df = docs_to_df(spark, generate_docs(n_docs=60, seed=23, scramble=True))
-    staged = run_pipeline(df, with_metadata=True)
-    fused = run_pipeline_fused(explode_spans(df))
-    assert staged.columns == fused.columns
-    a = {r["doc_id"]: r.asDict(recursive=True) for r in staged.collect()}
-    b = {r["doc_id"]: r.asDict(recursive=True) for r in fused.collect()}
-    assert a == b
+    docs = generate_docs(n_docs=60, seed=23, scramble=True)
+    fused = run_pipeline_fused(explode_spans(docs_to_df(spark, docs)))
+    want = {g["doc_id"]: g for g in golden_outputs(docs)}
+    # collect() hands maps back as hash-ordered dicts; map_keys keeps
+    # the stored key order
+    rows = fused.withColumn("_hist_keys", F.map_keys("block_class_hist")).collect()
+    got = {r["doc_id"]: r.asDict(recursive=True) for r in rows}
+    for doc_id, g in want.items():
+        assert got[doc_id].pop("_hist_keys") == list(g["block_class_hist"]), doc_id
+    assert got == want
 
 
 def test_fused_pipeline_matches_golden(spark):
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
     docs = generate_docs(n_docs=40, seed=31, scramble=True)
     got = {
         r["doc_id"]: r for r in run_pipeline_fused(explode_spans(docs_to_df(spark, docs))).collect()
@@ -188,25 +168,11 @@ def test_markdown_rendering(spark):
     assert again == {r["doc_id"]: r["markdown"] for r in rows}
 
 
-def test_fused_two_phase_mega_doc(spark):
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
-    mega = generate_docs(n_docs=8, seed=41, scramble=True, mega_doc_spans=400)
-    df = docs_to_df(spark, mega)
-    single = {r["doc_id"]: r for r in run_pipeline_fused(explode_spans(df)).collect()}
-    two = {
-        r["doc_id"]: r
-        for r in run_pipeline_fused(explode_spans(df), two_phase=True).collect()
-    }
-    assert single.keys() == two.keys()
-    for k in single:
-        assert single[k].asDict(recursive=True) == two[k].asDict(recursive=True)
-
-
 def test_with_organized_text_stage(spark):
     """Opt-in organize stage: one column appended, values equal the
     per-doc Python machine keyed by the dominant special class."""
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused, with_organized_text
+    from smartglass_ocr_spark.golden import extract_class
+    from smartglass_ocr_spark.pipeline import with_organized_text
     from smartglass_ocr_spark.rules.format import organize_text
 
     df = docs_to_df(spark, generate_docs(n_docs=25, seed=9))
@@ -217,13 +183,15 @@ def test_with_organized_text_stage(spark):
         hist = dict(r["block_class_hist"] or {})
         dominant = max(special, key=lambda c: (hist.get(c, 0), -special.index(c)))
         cls = dominant if hist.get(dominant, 0) else "content"
+        assert extract_class(hist) == cls
         assert r["organized_text"] == organize_text(r["formatted_text"] or "", cls)
 
 
 def test_skew_routed_bit_identical(spark):
     """run_pipeline_skew_routed must be bit-identical to the fused
-    path — per-span classification is context-free and the staged
-    branch is in golden lockstep — including the mega doc's own row."""
+    path — per-span classification is context-free and both branches
+    end in golden.document_metadata — including the mega doc's own
+    row."""
     from smartglass_ocr_spark.pipeline import (
         explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
     )
@@ -309,8 +277,6 @@ def test_doc_cap_bounds_mega_task(spark):
     run must finish in a small fraction of the uncapped wall."""
     import time
 
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
     df = docs_to_df(spark, _short_span_mega_corpus(4, 200_000)).cache()
     df.count()
     rows = explode_spans(df)
@@ -375,6 +341,8 @@ def test_skew_routed_hist_key_order_matches_fused(spark):
     key ORDER (first-occurrence span order), not just dict equality —
     a bytewise row comparison after serialization depends on it (r3
     ADVICE: value_counts built it count-descending)."""
+    from pyspark.sql import functions as F
+
     from smartglass_ocr_spark.pipeline import (
         explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
     )
@@ -383,18 +351,37 @@ def test_skew_routed_hist_key_order_matches_fused(spark):
         spark, generate_docs(n_docs=8, seed=5, scramble=True, mega_doc_spans=3000)
     )
     rows = explode_spans(df)
-    fused = {
-        r["doc_id"]: list((r["block_class_hist"] or {}).keys())
-        for r in run_pipeline_fused(rows).collect()
-    }
-    routed = {
-        r["doc_id"]: list((r["block_class_hist"] or {}).keys())
-        for r in run_pipeline_skew_routed(rows, mega_doc_spans=1000).collect()
-    }
+
+    def hist_keys(out):
+        # map_keys keeps the stored key order; collect() would hand
+        # the map back as a hash-ordered dict
+        keys = out.select("doc_id", F.map_keys("block_class_hist").alias("k"))
+        return {r["doc_id"]: list(r["k"] or []) for r in keys.collect()}
+
+    fused = hist_keys(run_pipeline_fused(rows))
+    routed = hist_keys(run_pipeline_skew_routed(rows, mega_doc_spans=1000))
     assert fused == routed
     # the mega doc actually took the routed branch and has >1 class
     mega = next(d for d in fused if "mega" in d)
     assert len(fused[mega]) > 1
+
+
+def test_skew_routed_leaves_no_cache(spark):
+    """A routed run owns its routing state: the mega-id set is
+    collected, never persisted, so no cached block outlives the run."""
+    from smartglass_ocr_spark.pipeline import run_pipeline_skew_routed
+
+    def cached_partitions():
+        return sum(
+            info.numCachedPartitions()
+            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        )
+
+    df = docs_to_df(spark, generate_docs(8, seed=5, mega_doc_spans=3000))
+    before = cached_partitions()
+    routed = run_pipeline_skew_routed(explode_spans(df), mega_doc_spans=1000)
+    routed.write.format("noop").mode("overwrite").save()
+    assert cached_partitions() - before == 0
 
 
 def test_doc_span_cap_equals_pretruncated(spark):
@@ -404,8 +391,6 @@ def test_doc_span_cap_equals_pretruncated(spark):
     or emits — spans past the cap. Default (no cap) output is pinned
     byte-identical by the golden tests."""
     from smartglass_ocr_spark.golden import truncate_doc_spans
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
     docs = generate_docs(n_docs=16, seed=13, scramble=True, mega_doc_spans=900)
     capped_corpus = [
         {"doc_id": d["doc_id"], "spans": truncate_doc_spans(d["spans"], 300, 20_000)}

@@ -129,6 +129,7 @@ def main() -> None:
                             "err": "no_oracle",
                         }
                         print(f"....  {name}: no_oracle, spark_rows={n}")
+                    spark.catalog.clearCache()
                     continue
                 sdf = fn(spark, SF_DIR).toPandas()
                 ddf = con.sql(oracles[name]).df()

@@ -24,16 +24,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # flagship
 # --------------------------------------------------------------------
 
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: derive the interleaved spans corpus from the flat
-    sf0.001 documents table (one narrow stage), run the extraction
-    pipeline (reassemble -> classify/clean -> metadata), and return
-    per-doc results with flattened span stats."""
+def _extracted_docs(docs: DataFrame) -> DataFrame:
+    """The flagship run: derive the interleaved spans corpus from the
+    flat documents table (one narrow stage) and run the extraction
+    pipeline (reassemble -> classify/clean -> metadata)."""
     from smartglass_ocr_spark.corpus import span_rows_from_flat
     from smartglass_ocr_spark.pipeline import run_pipeline_fused
 
+    return run_pipeline_fused(span_rows_from_flat(docs))
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: the extraction pipeline over sf0.001, returned as
+    per-doc results with flattened span stats."""
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
-    out = run_pipeline_fused(span_rows_from_flat(docs))
+    out = _extracted_docs(docs)
     return out.select(
         "doc_id",
         F.size("spans").alias("n_spans"),
@@ -707,15 +712,17 @@ def _curation_oracle() -> str:
     # elsewhere — if a future edit changes the FROM spelling or adds a
     # CTE name this rename loop doesn't know, fail HERE at import time
     # with a clear message, not downstream with a wrong composed query
-    assert "FROM documents" not in quality and "FROM documents" not in mh, (
-        "curation oracle: a shared CTE body gained an un-re-sourced "
-        "'FROM documents' — update _curation_oracle's replaces"
-    )
+    if "FROM documents" in quality or "FROM documents" in mh:
+        raise RuntimeError(
+            "curation oracle: a shared CTE body gained an un-re-sourced "
+            "'FROM documents' — update _curation_oracle's replaces"
+        )
     declared = set(_re.findall(r"(\w+) AS \(", mh))
-    assert declared == {"mh_toks", "mh_sh", "mh_sigs", "mh_bwidth", "mh_mh_pairs"}, (
-        f"curation oracle: _MINHASH_PAIRS_CTE declares unexpected CTEs "
-        f"{declared} — update the rename list"
-    )
+    if declared != {"mh_toks", "mh_sh", "mh_sigs", "mh_bwidth", "mh_mh_pairs"}:
+        raise RuntimeError(
+            f"curation oracle: _MINHASH_PAIRS_CTE declares unexpected CTEs "
+            f"{declared} — update the rename list"
+        )
     return rf"""
         WITH RECURSIVE corpus0 AS (
             SELECT * FROM documents WHERE source NOT IN ('src18', 'src19')
@@ -1049,12 +1056,7 @@ def _q_pipeline_extract(spark, sf_dir):
 
 
 def _q_pipeline_doc_meta(spark, sf_dir):
-    from smartglass_ocr_spark.corpus import span_rows_from_flat
-    from smartglass_ocr_spark.pipeline import run_pipeline_fused
-
-    docs = _t(spark, sf_dir, "documents")
-    out = run_pipeline_fused(span_rows_from_flat(docs))
-    return out.select(
+    return _extracted_docs(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.size("spans").alias("n_spans"), "lang", "structure",
         F.round("confidence", 4).alias("confidence"), "status",
     )
@@ -1150,12 +1152,7 @@ def _q_signage_content(spark, sf_dir):
 
 
 def _q_pipeline_fused(spark, sf_dir):
-    from smartglass_ocr_spark.corpus import span_rows_from_flat
-    from smartglass_ocr_spark.pipeline import run_pipeline_fused
-
-    docs = _t(spark, sf_dir, "documents")
-    out = run_pipeline_fused(span_rows_from_flat(docs))
-    return out.select(
+    return _extracted_docs(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.size("spans").alias("n_spans"), "lang", "structure",
         # F8 formatted output, fingerprinted (full text exercised by
         # the golden-equality pytest; the driver checks determinism)

@@ -15,6 +15,8 @@ file layout. Resume = LEFT ANTI JOIN of buckets against completed
 checkpoint rows (J5 in SURVEY.md §2.3). Output is written with
 dynamic partition overwrite keyed by the same partition_id, so a
 re-run of a partition replaces exactly its own files — idempotent.
+The overwrite mode is an option of the job's own writer; the session
+conf is never touched.
 
 Storage is parquet here (no Iceberg runtime jars in this sandbox);
 the layout (append-only checkpoint log + partition-overwrite output)
@@ -133,10 +135,12 @@ def run_extraction_job(
 ) -> dict:
     """Run the extraction pipeline partition-incrementally.
 
-    Returns {"processed": [...], "skipped": [...]} partition ids.
-    Re-running after success is a no-op; re-running after a partial
-    failure processes only the incomplete partitions and overwrites
-    only their own output files.
+    Returns {"processed": [...], "skipped": [...]} partition ids plus
+    this run's ``n_docs``/``n_spans`` totals — the sums of the
+    per-partition lineage rows it appends, so the two agree by
+    construction. Re-running after success is a no-op; re-running
+    after a partial failure processes only the incomplete partitions
+    and overwrites only their own output files.
 
     The input here is already doc-shaped (one row = one whole spans
     array), so the fused doc stage runs with ZERO reassembly shuffle —
@@ -151,8 +155,6 @@ def run_extraction_job(
     column exists only in capped runs' files.
     """
     from smartglass_ocr_spark.pipeline import fused_doc_stage
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     bucketed = with_partition_id(documents, n_partitions)
     done = completed_partitions(spark, checkpoint_path)
@@ -193,30 +195,15 @@ def run_extraction_job(
     result = with_partition_id(cleaned, n_partitions).withColumn(
         "n_spans", F.size("spans")
     )
-    # one pass: write output partitioned by the stable bucket id;
-    # an Observation rides the write for exactly-once global totals
-    # (returned in the result dict — no extra job)
-    from pyspark.sql import Observation
-
-    obs = Observation(f"extract_{run_id}")
-    observed = result.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_spans").alias("n_spans"),
-    )
+    # one pass: write output partitioned by the stable bucket id; the
+    # dynamic overwrite mode rides this writer only, never the session
     (
-        observed.repartition("partition_id")
+        result.repartition("partition_id")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id")
         .parquet(output_path)
     )
-    try:
-        totals = obs.get
-    except Exception:
-        # a fully-resumed run writes zero rows in zero tasks — the
-        # observation never produces its metrics row and `get` fails
-        # converting it; there is genuinely nothing to report
-        totals = {"n_docs": 0, "n_spans": 0}
     wall_ms = int((time.perf_counter() - t0) * 1000)
     finished = datetime.now(timezone.utc)
 
@@ -259,7 +246,7 @@ def run_extraction_job(
     return {
         "processed": processed,
         "skipped": sorted(done),
-        # write-pass totals for THIS run (Observation, no extra job)
-        "n_docs": int(totals.get("n_docs") or 0),
-        "n_spans": int(totals.get("n_spans") or 0),
+        # THIS run's totals: the sums of its lineage rows
+        "n_docs": sum(r["n_docs"] for r in stats),
+        "n_spans": sum(r["n_spans"] or 0 for r in stats),
     }

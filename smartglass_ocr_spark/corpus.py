@@ -1,4 +1,6 @@
-"""Deterministic synthetic corpus generators (FIXTURES.md §1).
+"""Deterministic synthetic corpus generators (FIXTURES.md §1) and the
+one definition of the documents shape (``SPAN_TYPE``/``DOCS_SCHEMA``,
+shared by the sources, streaming and pipeline modules).
 
 Two shapes:
 
@@ -8,10 +10,13 @@ Two shapes:
    tables, forms, scientific notation, boilerplate HTML, scrambled
    pdf_line ordering, media passthrough). Used by unit/golden tests.
 
-2. :func:`spans_from_flat` — Spark-native derivation of the spans
-   corpus from the driver's flat ``documents.parquet``
-   (doc_id, text, ...) so bench/driver-contract runs use the provided
-   testdata (TESTDATA.md) without any driver-side loops. Fully
+2. Spark-native derivation of the spans corpus from the driver's flat
+   ``documents.parquet`` (doc_id, text, ...) so bench/driver-contract
+   runs use the provided testdata (TESTDATA.md) without any
+   driver-side loops: :func:`spans_from_flat` (one spans array per
+   doc) and :func:`span_rows_from_flat` (one row per span). Both
+   project the same span-field builder (:func:`_span_fields`), so
+   exploding the first gives the second by construction. Fully
    deterministic: kinds/media interleaving keyed on xxhash64 of
    (doc_id, span index); media_ref = sha1 as in FIXTURES.md §1.
 
@@ -24,8 +29,21 @@ import hashlib
 import random
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
-SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
+# the one definition of a span and of the documents shape
+SPAN_TYPE = StructType(
+    [
+        StructField("kind", StringType()),
+        StructField("text", StringType()),
+        StructField("media_ref", StringType()),
+        StructField("offset", IntegerType()),
+    ]
+)
+SPAN_STRUCT = SPAN_TYPE.simpleString()
+DOCS_SCHEMA = StructType(
+    [StructField("doc_id", StringType()), StructField("spans", ArrayType(SPAN_TYPE))]
+)
 
 _EN_WORDS = (
     "the quick brown fox jumps over a lazy dog while many people watch "
@@ -243,7 +261,7 @@ def docs_to_df(spark, docs: list[dict]) -> DataFrame:
         )
         for d in docs
     ]
-    return spark.createDataFrame(rows, f"doc_id string, spans array<{SPAN_STRUCT}>")
+    return spark.createDataFrame(rows, DOCS_SCHEMA)
 
 
 # --------------------------------------------------------------------
@@ -257,31 +275,41 @@ _FLAT_KINDS = [
 ]
 
 
-def _kind_expr(doc_id: Column, idx: Column) -> Column:
-    """Deterministic kind for span *idx* of *doc_id* via xxhash64 —
-    computed JVM-side, no Python."""
-    bucket = F.pmod(F.xxhash64(doc_id, idx), F.lit(len(_FLAT_KINDS)))
-    expr = F.lit(_FLAT_KINDS[0])
-    for i in range(1, len(_FLAT_KINDS)):
-        expr = F.when(bucket == i, F.lit(_FLAT_KINDS[i])).otherwise(expr)
-    return expr
+def _span_hash(i: Column, kind_hash: str) -> Column:
+    """Per-span hash of (doc_id, span index *i*) that drives the kind
+    and offset interleaving."""
+    if kind_hash == "xxhash64":
+        return F.xxhash64(F.col("doc_id"), i)
+    return F.conv(
+        F.substring(F.md5(F.concat_ws(":", F.col("doc_id"), i.cast("string"))), 1, 8),
+        16,
+        10,
+    ).cast("long")
 
 
-def _span_fields(i: Column) -> list[Column]:
-    """The four span field expressions for span index *i* of the
-    current row (needs columns doc_id, w, chunk in scope). Shared
-    between the array and row derivations so both produce bit-
-    identical spans. All plain (non-higher-order) expressions —
-    whole-stage-codegen friendly."""
-    kind = _kind_expr(F.col("doc_id"), i)
-    offset = (i * 7 + F.pmod(F.xxhash64(F.col("doc_id"), i), F.lit(5))).cast("int")
+def _span_kind(h: Column) -> Column:
+    """Kind for span hash *h*: an array-literal lookup of its bucket."""
+    bucket = F.pmod(h, F.lit(len(_FLAT_KINDS)))
+    return F.element_at(
+        F.array(*[F.lit(k) for k in _FLAT_KINDS]), (bucket + 1).cast("int")
+    )
+
+
+def _span_fields(i: Column, h: Column, kind: Column, kind_hash: str) -> list[Column]:
+    """The four span field expressions for span index *i* with hash
+    *h* and kind *kind* (needs columns doc_id, w, chunk in scope) — the
+    one derivation both :func:`spans_from_flat` and
+    :func:`span_rows_from_flat` project, so their spans are equal by
+    construction. All plain (non-higher-order) expressions."""
+    offset = (i * 7 + F.pmod(h, F.lit(5))).cast("int")
     is_media = kind.isin("image", "video", "audio")
     span_text = F.concat_ws(
         " ", F.slice(F.col("w"), (i * F.col("chunk") + 1).cast("int"), F.col("chunk"))
     )
+    ref_key = F.concat_ws(":", F.col("doc_id"), offset.cast("string"))
     media_ref = F.concat(
         F.lit("m-"),
-        F.substring(F.sha1(F.concat_ws(":", F.col("doc_id"), offset.cast("string"))), 1, 12),
+        F.substring(F.sha1(ref_key) if kind_hash == "xxhash64" else F.md5(ref_key), 1, 12),
     )
     return [
         kind.alias("kind"),
@@ -321,11 +349,12 @@ def spans_from_flat(documents: DataFrame, spans_per_doc: int = 8) -> DataFrame:
     lambda under GenerateExec (benched ~100x slower than exploding a
     materialized array).
     """
+    def span(i: Column) -> Column:
+        h = _span_hash(i, "xxhash64")
+        return F.struct(*_span_fields(i, h, _span_kind(h), "xxhash64"))
+
     return _flat_base(documents, spans_per_doc).select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(0), F.col("n") - 1), lambda i: F.struct(*_span_fields(i))
-        ).alias("spans"),
+        "doc_id", F.transform(F.sequence(F.lit(0), F.col("n") - 1), span).alias("spans")
     )
 
 
@@ -366,39 +395,8 @@ def span_rows_from_flat(documents: DataFrame, spans_per_doc: int = 8,
         F.explode(F.sequence(F.lit(0), F.col("n") - 1)).alias("_i"),
     )
     i = F.col("_i")
-    if kind_hash == "xxhash64":
-        h = F.xxhash64(F.col("doc_id"), i)
-    else:
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("doc_id"), i.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-    # hoist kind into its own projection as an array-literal lookup:
-    # element_at(kinds, bucket+1) === the when-chain (default bucket 0
-    # -> _FLAT_KINDS[0]), evaluated ONCE per span instead of the CASE
-    # tree re-inlined into each of the three kind-dependent fields
-    bucket = F.pmod(h, F.lit(len(_FLAT_KINDS)))
-    kind = F.element_at(
-        F.array(*[F.lit(k) for k in _FLAT_KINDS]), (bucket + 1).cast("int")
-    )
-    staged = idx.select("doc_id", "w", "chunk", "_i", kind.alias("_kind"))
-    offset = (i * 7 + F.pmod(h, F.lit(5))).cast("int")
-    is_media = F.col("_kind").isin("image", "video", "audio")
-    span_text = F.concat_ws(
-        " ", F.slice(F.col("w"), (i * F.col("chunk") + 1).cast("int"), F.col("chunk"))
-    )
-    ref_key = F.concat_ws(":", F.col("doc_id"), offset.cast("string"))
-    media_ref = F.concat(
-        F.lit("m-"),
-        F.substring(F.sha1(ref_key) if kind_hash == "xxhash64" else F.md5(ref_key), 1, 12),
-    )
-    return staged.select(
-        "doc_id",
-        F.col("_kind").alias("kind"),
-        F.when(is_media, F.lit(None).cast("string")).otherwise(span_text).alias("text"),
-        F.when(is_media, media_ref).otherwise(F.lit(None).cast("string")).alias("media_ref"),
-        offset.alias("offset"),
-    )
+    h = _span_hash(i, kind_hash)
+    # kind hoisted into its own projection: evaluated ONCE per span
+    # instead of re-inlined into each of the three kind-dependent fields
+    staged = idx.select("doc_id", "w", "chunk", "_i", _span_kind(h).alias("_kind"))
+    return staged.select("doc_id", *_span_fields(i, h, F.col("_kind"), kind_hash))

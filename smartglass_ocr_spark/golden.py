@@ -12,12 +12,12 @@ span-sequence equality (kind, text, media_ref, order) — BASELINE.json
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from smartglass_ocr_spark.rules.classify import MEDIA_KINDS, classify_block, strip_html
 from smartglass_ocr_spark.rules.cleanup import clean_for_class
 from smartglass_ocr_spark.rules.confidence import status_for, weighted_confidence
-from smartglass_ocr_spark.rules.extract import (
-    confidence_level, extract_structured, extract_structured_typed,
-)
+from smartglass_ocr_spark.rules.extract import confidence_level, extract_structured
 from smartglass_ocr_spark.rules.format import format_text
 from smartglass_ocr_spark.rules.langdetect import detect_language
 from smartglass_ocr_spark.rules.structure import detect_structure
@@ -98,31 +98,33 @@ def process_document(
     first (default off — byte-identical to the uncapped spec).
     """
     spans = truncate_doc_spans(doc["spans"], max_spans, max_bytes)
-    out_spans = []
-    class_hist: dict[str, int] = {}
-    for s in spans:
-        block_class, clean = process_span(s["kind"], s["text"])
-        class_hist[block_class] = class_hist.get(block_class, 0) + 1
-        out_spans.append(
-            {
-                "kind": s["kind"],
-                "text": clean,
-                "media_ref": s["media_ref"],
-                "offset": s["offset"],
-            }
-        )
-    return document_metadata(doc["doc_id"], out_spans, class_hist)
+    return document_metadata(
+        doc["doc_id"],
+        (
+            (s["kind"], *process_span(s["kind"], s["text"]), s["media_ref"], s["offset"])
+            for s in spans
+        ),
+    )
 
 
-def document_metadata(
-    doc_id: str, out_spans: list[dict], class_hist: dict[str, int]
-) -> dict:
+def document_metadata(doc_id: str, classified: Iterable[tuple]) -> dict:
     """The post-classification half of :func:`process_document`: the
-    full golden output row for ALREADY cleaned+classified spans in
+    full golden output row for ALREADY classified+cleaned spans, given
+    as ``(kind, block_class, clean_text, media_ref, offset)`` tuples in
     offset order. Split out so the skew-routed pipeline can classify a
     mega-document's spans distributed across the cluster and run only
     this per-doc tail serially — equality with the fused path is then
     by construction (per-span classification is context-free)."""
+    out_spans = []
+    # block classes in first-occurrence span order (dict insertion
+    # order is part of the output: block_class_hist's key order)
+    class_hist: dict[str, int] = {}
+    for kind, block_class, text, media_ref, offset in classified:
+        class_hist[block_class] = class_hist.get(block_class, 0) + 1
+        out_spans.append(
+            {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
+        )
+
     # document text = non-empty cleaned text spans joined in order
     # (the analogue of the text the reference hands to format_text)
     doc_text = "\n\n".join(
@@ -145,7 +147,9 @@ def document_metadata(
     # (:1212-1228) — consumes the FORMATTED text.
     formatted_text = format_text(doc_text)
 
-    extraction_class = extract_class(class_hist)
+    structured_info, structured_typed = extract_structured(
+        extract_class(class_hist), formatted_text
+    )
 
     # confidence is the extraction-time score (the reference's is
     # engine-derived, computed before formatting) — fed the pre-format
@@ -170,11 +174,11 @@ def document_metadata(
         # (ref lib/smartglass_ocr.py:1222)
         "structure": detect_structure(formatted_text),
         "block_class_hist": class_hist,
-        "structured_info": extract_structured(extraction_class, formatted_text),
-        # typed nested twin (receipt items array<struct>, table
-        # headers/rows — the reference's actual JSON shapes); None
-        # for classes whose reference output is a flat map anyway
-        "structured_typed": extract_structured_typed(extraction_class, formatted_text),
+        "structured_info": structured_info,
+        # typed nested view of the same parse (receipt items
+        # array<struct>, table headers/rows — the reference's actual
+        # JSON shapes); None for classes whose output is a flat map
+        "structured_typed": structured_typed,
         "summary": summary,
         "key_insights": key_insights,
         "confidence": confidence,

@@ -27,10 +27,22 @@ tier as the streaming state machines.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+
+# Java's ``\s`` — the whitespace Spark's ``split``/``regexp_replace``
+# (and so ``bpe_alphabet`` and the oracle) treat as word breaks;
+# Python's ``\s`` and ``str.split()`` also break on Unicode spaces
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _words(text: str) -> list[str]:
+    return [w for w in _JAVA_WS.split(text) if w]
 
 
 def _merge_word(syms: list[str], a: str, b: str) -> list[str]:
@@ -272,7 +284,7 @@ def bpe_encode(
             return got
 
         return texts.map(
-            lambda t: [i for w in t.split() for i in seg(w)] if t else []
+            lambda t: [i for w in _words(t) for i in seg(w)] if t else []
         )
 
     return docs.select(
@@ -314,7 +326,7 @@ def bpe_token_counts(
             return got
 
         return texts.map(
-            lambda t: sum(count_word(w) for w in t.split()) if t else 0
+            lambda t: sum(count_word(w) for w in _words(t)) if t else 0
         )
 
     toks = F.split(F.trim(F.col(text_col)), r"\s+")

@@ -147,35 +147,3 @@ def zorder_write(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    buckets: int = 32,
-    key: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize a frame as a Hive-bucketed managed table:
-    ``bucketBy(buckets, key)`` + ``sortBy(key)``, so every future
-    equi-join or aggregation on ``key`` between tables bucketed the
-    same way runs EXCHANGE-FREE — the co-location is paid once at
-    write time instead of once per query. This is the standing-table
-    answer for the joins a curation stack repeats every run (docs ⋈
-    components, docs ⋈ quality verdicts, docs ⋈ split assignments):
-    at 10^12 docs the corpus-side shuffle is the single largest cost
-    in each of those, and bucketing deletes it from all of them.
-
-    Bucketed tables must go through the catalog (``saveAsTable`` —
-    plain ``parquet(path)`` silently drops bucket metadata, which is
-    why this lives behind an operator instead of a call-site
-    convention). Pair with ``session.py``'s warehouse dir; the bucket
-    count should divide evenly into the cluster's parallelism at the
-    target scale."""
-    (
-        df.write.bucketBy(buckets, key)
-        .sortBy(key)
-        .mode(mode)
-        .format("parquet")
-        .saveAsTable(table)
-    )

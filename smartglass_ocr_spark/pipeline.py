@@ -14,11 +14,14 @@ kind,text,media_ref,offset>>)`` or their exploded span rows:
 is its mega-document variant: heavy docs get their per-span
 classify/clean distributed (:func:`classify_and_clean`) and only the
 per-doc tail (``golden.document_metadata``) runs per doc.
-:func:`extracted_span_rows` is the flat per-span view.
+:func:`extracted_span_rows` is the flat per-span view;
+:func:`with_organized_text` / :func:`with_markdown` append opt-in
+per-doc string columns through one shared ``mapInPandas`` helper.
 
-Per-span semantics = ``golden.process_span``, per-doc semantics =
-``golden.document_metadata`` (the executable spec); reference
-citations live in the rules modules.
+Per-span semantics = ``golden.process_span``, per-doc semantics
+(class-histogram fold included) = ``golden.document_metadata`` — the
+executable spec; this module holds no second copy of either.
+Reference citations live in the rules modules.
 """
 
 from __future__ import annotations
@@ -29,6 +32,8 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, MapType, StringType, StructField,
     StructType,
 )
+
+from smartglass_ocr_spark.corpus import SPAN_TYPE
 
 # largest mega-doc id set the skew router broadcasts; past it the
 # routing flag is a shuffle join, never an unbounded collect()
@@ -121,19 +126,10 @@ def classify_and_clean(span_rows: DataFrame) -> DataFrame:
     )
 
 
-_SPAN_STRUCT_TYPE = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("offset", IntegerType()),
-    ]
-)
-
 _DOC_OUT_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(_SPAN_STRUCT_TYPE)),
+        StructField("spans", ArrayType(SPAN_TYPE)),
         StructField("block_class_hist", MapType(StringType(), IntegerType())),
         StructField("formatted_text", StringType()),
         StructField("lang", StringType()),
@@ -308,32 +304,33 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     )
 
     def meta_tail(key, pdf):
-        # per-doc metadata tail over ALREADY classified flat span rows:
-        # sort by offset, fold the class histogram, and run the exact
-        # post-classification half of the golden spec — output equals
-        # the fused path bit-for-bit (asserted in tests)
+        # per-doc metadata tail over ALREADY classified flat span rows,
+        # sorted by offset: the exact post-classification half of the
+        # golden spec — output equals the fused path bit-for-bit
         from smartglass_ocr_spark.golden import document_metadata
 
         pdf = pdf.sort_values("offset")
-        out_spans = [
-            {"kind": k, "text": t, "media_ref": m, "offset": int(o)}
-            for k, t, m, o in zip(
-                pdf["kind"].tolist(), pdf["text"].tolist(),
-                pdf["media_ref"].tolist(), pdf["offset"].tolist(),
-            )
-        ]
-        # histogram in span-offset iteration order (NOT value_counts's
-        # count-descending order): golden.process_document inserts keys
-        # at first occurrence in span order, and the routed output is
-        # meant to be byte-identical even under a serialization that
-        # preserves dict order (r3 ADVICE)
-        hist: dict[str, int] = {}
-        for c in pdf["block_class"].tolist():
-            hist[c] = hist.get(c, 0) + 1
-        return pd.DataFrame([document_metadata(key[0], out_spans, hist)])
+        classified = zip(
+            *(pdf[c].tolist() for c in ("kind", "block_class", "text", "media_ref", "offset"))
+        )
+        return pd.DataFrame([document_metadata(key[0], classified)])
 
     mega_out = cleaned.groupBy("doc_id").applyInPandas(meta_tail, _DOC_OUT_SCHEMA)
     return small_out.unionByName(mega_out)
+
+
+def _with_row_column(pipeline_out: DataFrame, name: str, fn) -> DataFrame:
+    """Appends string column *name* = ``fn(row)`` per output row (row
+    as a dict) in one Arrow crossing, off the equality path."""
+
+    def run(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf[name] = [fn(row) for row in pdf.to_dict("records")]
+            yield pdf
+
+    schema = StructType(pipeline_out.schema.fields + [StructField(name, StringType())])
+    return pipeline_out.mapInPandas(run, schema)
 
 
 def with_organized_text(pipeline_out: DataFrame) -> DataFrame:
@@ -342,47 +339,25 @@ def with_organized_text(pipeline_out: DataFrame) -> DataFrame:
     ``organized_text`` column keyed by each doc's dominant special
     block class. NOT part of the golden path — the reference never
     runs it — but exposed for users who want the per-class line
-    machines applied at scale. One Arrow crossing, off the equality
-    path (same pattern as :func:`with_markdown`)."""
+    machines applied at scale."""
+    from smartglass_ocr_spark.golden import extract_class
+    from smartglass_ocr_spark.rules.format import organize_text
 
-    def run(batches):
-        from smartglass_ocr_spark.golden import extract_class
-        from smartglass_ocr_spark.rules.format import organize_text
+    def organized(row):
+        cls = extract_class(row.get("block_class_hist") or {})
+        return organize_text(row.get("formatted_text") or "", cls)
 
-        for pdf in batches:
-            organized = []
-            for row in pdf.to_dict("records"):
-                cls = extract_class(row.get("block_class_hist") or {})
-                organized.append(organize_text(row.get("formatted_text") or "", cls))
-            pdf = pdf.copy()
-            pdf["organized_text"] = organized
-            yield pdf
-
-    schema = StructType(
-        pipeline_out.schema.fields + [StructField("organized_text", StringType())]
-    )
-    return pipeline_out.mapInPandas(run, schema)
+    return _with_row_column(pipeline_out, "organized_text", organized)
 
 
 def with_markdown(pipeline_out: DataFrame) -> DataFrame:
     """Adds the F14 rendered-report column (rules.markdown) to a
-    pipeline output frame — one Arrow crossing, off the equality
-    path. At scale this is the column written to the report sink
-    (ref sink S4, one .md file per doc, becomes one column in the
-    results table)."""
+    pipeline output frame. At scale this is the column written to the
+    report sink (ref sink S4, one .md file per doc, becomes one column
+    in the results table)."""
+    from smartglass_ocr_spark.rules.markdown import render_markdown
 
-    def run(batches):
-        from smartglass_ocr_spark.rules.markdown import render_markdown
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["markdown"] = [
-                render_markdown(row) for row in pdf.to_dict("records")
-            ]
-            yield pdf
-
-    schema = StructType(pipeline_out.schema.fields + [StructField("markdown", StringType())])
-    return pipeline_out.mapInPandas(run, schema)
+    return _with_row_column(pipeline_out, "markdown", render_markdown)
 
 
 def extracted_span_rows(documents: DataFrame | None = None,

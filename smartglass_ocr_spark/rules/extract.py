@@ -1,18 +1,18 @@
 """Structured field extraction (E1-E7 in SURVEY.md §2.8).
 
 Re-expresses ``lib/information_extraction.py`` as pure functions.
-Two views of the same extraction:
+The dispatcher :func:`extract_structured` parses a doc's text ONCE and
+returns two views of that one parse:
 
 - flattened ``dict[str, str]`` (Spark ``map<string,string>``;
   FIXTURES.md §3 ``structured_info``) — nested shapes flatten with
   deterministic keys (``item_0_name``, ``row_0``, ...);
-- TYPED nested twins (``extract_receipt_typed`` /
-  ``extract_table_typed`` / ``extract_structured_typed``) matching
-  the reference's actual JSON shapes byte-for-byte — receipt
-  ``items`` as a list of structs, table ``rows`` as {header: value}
-  maps — surfaced as the ``structured_typed`` struct column
-  (executed-reference parity with NO flattening caveat,
-  tests/test_reference_parity.py).
+- the TYPED nested struct (``structured_typed``) matching the
+  reference's actual JSON shapes byte-for-byte — receipt ``items`` as
+  a list of structs, table ``rows`` as {header: value} maps. The
+  per-class typed parsers (``extract_receipt_typed`` /
+  ``extract_table_typed``) are what tests/test_reference_parity.py
+  compares with the executed reference (NO flattening caveat).
 
 Parity citations:
 - dispatcher          -> ``lib/information_extraction.py:28-53``
@@ -199,7 +199,10 @@ def extract_receipt(text: str) -> dict[str, str]:
     """Flattened map view of :func:`extract_receipt_typed`
     (``item_N_*`` keys + ``items_count``) — the stable
     ``map<string,string>`` contract column."""
-    typed = extract_receipt_typed(text)
+    return _receipt_map(extract_receipt_typed(text))
+
+
+def _receipt_map(typed: dict) -> dict[str, str]:
     out = {k: v for k, v in typed.items() if k != "items"}
     for n, item in enumerate(typed["items"]):
         out[f"item_{n}_name"] = item["name"]
@@ -322,7 +325,10 @@ def extract_table_typed(text: str) -> dict:
     values[j]`` ≡ ``dict(zip(headers, values))`` — same truncation at
     the shorter side, same last-wins collapse of duplicate headers;
     empty row_data rows are skipped, ref :421-423)."""
-    headers, rows = _table_headers_rows(text)
+    return _table_nested(*_table_headers_rows(text))
+
+
+def _table_nested(headers: list[str], rows: list[list[str]]) -> dict:
     row_maps = [dict(zip(headers, values)) for values in rows]
     return {"headers": headers, "rows": [r for r in row_maps if r]}
 
@@ -330,7 +336,10 @@ def extract_table_typed(text: str) -> dict:
 def extract_table(text: str) -> dict[str, str]:
     """Flattened map view ('|'-joined headers and value rows) — the
     stable ``map<string,string>`` contract column."""
-    headers, rows = _table_headers_rows(text)
+    return _table_map(*_table_headers_rows(text))
+
+
+def _table_map(headers: list[str], rows: list[list[str]]) -> dict[str, str]:
     out = {"headers": "|".join(headers), "n_rows": str(len(rows))}
     for i, row in enumerate(rows):
         out[f"row_{i}"] = "|".join(row)
@@ -356,50 +365,35 @@ def extract_generic(text: str) -> dict[str, str]:
 
 
 # ---------------------------------------------------------------- E1
-def extract_structured(block_class: str, text: str) -> dict[str, str]:
+# the structured_typed.receipt struct's fields, in schema order
+_RECEIPT_TYPED_FIELDS = (
+    "merchant", "date", "time", "subtotal", "tax", "total", "payment_method", "items",
+)
+
+
+def extract_structured(block_class: str, text: str) -> tuple[dict[str, str], dict | None]:
     """Dispatcher (ref lib/information_extraction.py:28-53), keyed by
-    our block class instead of ImageType."""
+    our block class instead of ImageType. Parses *text* once and
+    returns both views: the flattened map (``structured_info``) and
+    the typed nested struct (``structured_typed``). Only receipts
+    (``items array<struct<name,quantity,price>>``, ref :236-274) and
+    tables (``headers``/``rows``, ref :366-369) are genuinely nested
+    in the reference; id_card/form/generic outputs are flat string
+    maps, fully carried by the map view — typed is None for them."""
     if not text:
-        return {}
+        return {}, None
     if block_class == "id_card":
-        return extract_id_card(text)
-    if block_class == "receipt":
-        return extract_receipt(text)
-    if block_class == "form":
-        return extract_form(text)
-    if block_class == "table":
-        return extract_table(text)
-    return extract_generic(text)
-
-
-def extract_structured_typed(block_class: str, text: str) -> dict | None:
-    """Typed nested twin of :func:`extract_structured` for the two
-    classes whose reference output is genuinely nested — receipts
-    (``items array<struct<name,quantity,price>>``, ref lib/
-    information_extraction.py:236-274) and tables (``headers``/
-    ``rows``, ref :366-369). id_card/form/generic reference shapes
-    are flat string maps already, fully carried by the flattened
-    ``structured_info`` column — None here."""
-    if not text:
-        return None
+        return extract_id_card(text), None
     if block_class == "receipt":
         t = extract_receipt_typed(text)
-        return {
-            "receipt": {
-                "merchant": t.get("merchant"),
-                "date": t.get("date"),
-                "time": t.get("time"),
-                "subtotal": t.get("subtotal"),
-                "tax": t.get("tax"),
-                "total": t.get("total"),
-                "payment_method": t.get("payment_method"),
-                "items": t["items"],
-            },
-            "table": None,
-        }
+        typed = {k: t.get(k) for k in _RECEIPT_TYPED_FIELDS}
+        return _receipt_map(t), {"receipt": typed, "table": None}
+    if block_class == "form":
+        return extract_form(text), None
     if block_class == "table":
-        return {"receipt": None, "table": extract_table_typed(text)}
-    return None
+        headers, rows = _table_headers_rows(text)
+        return _table_map(headers, rows), {"receipt": None, "table": _table_nested(headers, rows)}
+    return extract_generic(text), None
 
 
 def confidence_level(confidence: float) -> str:

@@ -19,9 +19,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from smartglass_ocr_spark.corpus import SPAN_STRUCT
+from smartglass_ocr_spark.corpus import DOCS_SCHEMA
 
-DOCS_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
 FLAT_SCHEMA = "doc_id bigint, text string"
 
 

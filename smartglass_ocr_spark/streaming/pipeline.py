@@ -12,12 +12,11 @@ exactly-once output even when foreachBatch re-delivers a batch).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from smartglass_ocr_spark.corpus import SPAN_STRUCT
+from smartglass_ocr_spark.corpus import DOCS_SCHEMA
 
-DOCS_STREAM_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
 EVENTS_SCHEMA = (
     "event_id bigint, user_id bigint, event_type string, ts timestamp, value double"
 )
@@ -29,7 +28,7 @@ def stream_documents(
     """Incremental reader over a landing directory of span-corpus
     parquet files. Schema is pinned (streaming sources must not
     infer); file-source checkpointing makes each file exactly-once."""
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
+    reader = spark.readStream.schema(DOCS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(source_dir)
@@ -130,24 +129,23 @@ def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
+def _doc_text() -> Column:
+    """A document's text: its non-NULL span texts joined with newlines
+    in array order (documents arrive whole, so no reassembly state)."""
+    return F.array_join(
+        F.filter(F.transform("spans", lambda s: s["text"]), lambda t: t.isNotNull()),
+        "\n",
+    )
+
+
 def stream_dedup_exact(stream_docs: DataFrame) -> DataFrame:
     """Stateful exact dedup on a document stream: the first document
     with a given text fingerprint passes, later arrivals (same batch
     or any later batch) are dropped. Built on Structured Streaming's
     native dropDuplicates state store — state is one md5 per distinct
     doc, checkpointed with the query. The batch twin is
-    ops.dedup.exact_duplicate_clusters.
-
-    Doc text = concat of its span texts in array order (documents
-    arrive whole, so no cross-batch reassembly state is needed)."""
-    doc_text = F.array_join(
-        F.filter(
-            F.transform("spans", lambda s: s["text"]),
-            lambda t: t.isNotNull(),
-        ),
-        "\n",
-    )
-    return stream_docs.withColumn("text_md5", F.md5(doc_text)).dropDuplicates(
+    ops.dedup.exact_duplicate_clusters. Doc text = :func:`_doc_text`."""
+    return stream_docs.withColumn("text_md5", F.md5(_doc_text())).dropDuplicates(
         ["text_md5"]
     )
 
@@ -165,15 +163,8 @@ def stream_dedup_near(stream_docs: DataFrame, n: int = 5) -> DataFrame:
     tool for thorough near-dedup."""
     from smartglass_ocr_spark.ops.dedup import min_shingle_fingerprint
 
-    doc_text = F.array_join(
-        F.filter(
-            F.transform("spans", lambda s: s["text"]),
-            lambda t: t.isNotNull(),
-        ),
-        "\n",
-    )
     return stream_docs.withColumn(
-        "fingerprint", min_shingle_fingerprint(n, doc_text)
+        "fingerprint", min_shingle_fingerprint(n, _doc_text())
     ).dropDuplicates(["fingerprint"])
 
 
@@ -201,15 +192,8 @@ def stream_dedup_simhash(stream_docs: DataFrame) -> DataFrame:
     (bag-of-words)."""
     from smartglass_ocr_spark.ops.dedup import simhash64_column
 
-    doc_text = F.array_join(
-        F.filter(
-            F.transform("spans", lambda s: s["text"]),
-            lambda t: t.isNotNull(),
-        ),
-        "\n",
-    )
     return stream_docs.withColumn(
-        "simhash", simhash64_column(doc_text)
+        "simhash", simhash64_column(_doc_text())
     ).dropDuplicates(["simhash"])
 
 

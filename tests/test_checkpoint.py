@@ -44,6 +44,8 @@ def test_full_run_then_rerun_is_noop(spark, paths):
     assert r2["processed"] == []
     assert r2["skipped"] == r1["processed"]
     assert _collect_output(spark, paths["out"]) == out1
+    # a fully resumed run writes zero rows and reports zero totals
+    assert (r1["n_docs"], r2["n_docs"], r2["n_spans"]) == (40, 0, 0)
 
 
 def test_resume_processes_only_incomplete(spark, paths):
@@ -76,6 +78,37 @@ def test_resume_processes_only_incomplete(spark, paths):
         for g in golden_outputs(docs_all)
     }
     assert out == want
+
+
+def test_resume_keeps_session_overwrite_mode(spark, paths):
+    """The job's dynamic partition overwrite is an option of its own
+    writer: a caller's session conf survives the job, and under a
+    ``static`` session the resume still keeps the partitions the
+    first run wrote. The returned totals are the lineage sums."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        docs_all = generate_docs(n_docs=40, seed=1)
+        df_all = docs_to_df(spark, docs_all)
+        half = with_partition_id(df_all, 8).filter("partition_id < 4").drop("partition_id")
+        r1 = run_extraction_job(
+            spark, half, paths["out"], paths["ckpt"], paths["metrics"], "run-1", n_partitions=8
+        )
+        r2 = run_extraction_job(
+            spark, df_all, paths["out"], paths["ckpt"], paths["metrics"], "run-2", n_partitions=8
+        )
+        assert spark.conf.get(key) == "static"
+        out = spark.read.parquet(paths["out"])
+        parts = {r[0] for r in out.select("partition_id").distinct().collect()}
+        assert parts == set(range(8))
+        assert out.count() == 40 == r1["n_docs"] + r2["n_docs"]
+        n_spans = sum(len(d["spans"]) for d in docs_all)
+        assert r1["n_spans"] + r2["n_spans"] == n_spans
+        ckpt = spark.read.parquet(paths["ckpt"])
+        assert ckpt.agg({"n_spans": "sum"}).first()[0] == n_spans
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_checkpoint_and_metrics_schema(spark, paths):

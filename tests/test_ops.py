@@ -1,6 +1,6 @@
 """Semantics tests for the training-data operators against small
 hand-checkable inputs + pure-Python oracles (the DuckDB oracle parity
-is covered separately by tools/check_contract.py / the driver gate).
+is covered separately by tools/check_oracles.py / the driver gate).
 """
 
 from __future__ import annotations
@@ -1416,6 +1416,20 @@ def test_bpe_encode_edges_null_unk_and_plan(spark):
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "Exchange" not in plan, plan
+
+
+def test_bpe_words_break_on_java_whitespace_only(spark):
+    """Encode and count split words on Java's ASCII ``\\s`` — the
+    whitespace ``bpe_alphabet`` strips — so a no-break or em space is
+    a symbol of its word (in the alphabet, never UNK), not a break."""
+    from smartglass_ocr_spark.ops.bpe import bpe_encode, bpe_token_counts
+
+    docs = spark.createDataFrame(
+        [(1, "ab\u00a0cd ef\u2003g")], "doc_id long, text string"
+    )
+    ids = bpe_encode(docs, []).first()["ids"]
+    assert len(ids) == 9 and -1 not in ids
+    assert bpe_token_counts(docs, []).first()["n_subwords"] == 9
 
 
 def test_bpe_encode_length_agrees_with_token_counts(spark):

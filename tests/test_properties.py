@@ -57,8 +57,9 @@ def test_doc_rules_total(text):
     assert isinstance(generate_summary(text), str)
     assert isinstance(extract_key_insights(text), list)
     for cls in ("content", "id_card", "receipt", "form", "table"):
-        info = extract_structured(cls, text)
+        info, typed = extract_structured(cls, text)
         assert all(isinstance(k, str) and isinstance(v, str) for k, v in info.items())
+        assert typed is None or set(typed) == {"receipt", "table"}
 
 
 @settings(max_examples=100, deadline=None)

@@ -56,3 +56,23 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     plan2 = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan2, plan2
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def test_spans_from_flat_explodes_to_span_rows_from_flat(spark):
+    """The array and the row derivation project the same span-field
+    builder: exploding ``spans_from_flat`` gives exactly the rows of
+    ``span_rows_from_flat``, in the same per-doc order."""
+    from smartglass_ocr_spark.corpus import span_rows_from_flat, spans_from_flat
+    from smartglass_ocr_spark.pipeline import explode_spans
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    for spans_per_doc in (8, 12):
+        want = span_rows_from_flat(docs, spans_per_doc).collect()
+        got = explode_spans(spans_from_flat(docs, spans_per_doc)).collect()
+        assert len(want) > docs.count()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+        # same span order within each doc (offsets ascend with index)
+        by_doc = {}
+        for r in got:
+            by_doc.setdefault(r["doc_id"], []).append(r["offset"])
+        assert all(o == sorted(o) for o in by_doc.values())

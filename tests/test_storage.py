@@ -95,12 +95,12 @@ def test_bucketed_tables_join_exchange_free(spark, tmp_path):
     """Two tables bucketed on the same key join with ZERO Exchange —
     the co-located-join property the operator exists for; the same
     join on plain parquet twins shows the shuffle it deletes."""
-    from smartglass_ocr_spark.ops.storage import write_bucketed_table
+    from smartglass_ocr_spark.sources import write_bucketed
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     meta = docs.select("doc_id", F.length("text").alias("n"))
-    write_bucketed_table(docs, "t_docs_b", buckets=4)
-    write_bucketed_table(meta, "t_meta_b", buckets=4)
+    write_bucketed(docs, "t_docs_b", "doc_id", buckets=4)
+    write_bucketed(meta, "t_meta_b", "doc_id", buckets=4)
     # disable broadcast throughout: BOTH joins must take the
     # SortMergeJoin shape so the comparison isolates the exchange
     # (with broadcast on, a small build side would hide the shuffle

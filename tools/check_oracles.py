@@ -14,6 +14,9 @@ before it fails in the driver. The r4 ``sequence_pack`` red row
 shipped precisely because the old checker used ``fetchall()`` (HUGEINT
 → Python int → green locally, red in the driver).
 
+Queries without an oracle get the driver's rows-only check: they must
+run and return at least one row.
+
 Usage:
     python tools/check_oracles.py [query ...]
     python tools/check_oracles.py --json SELFCHECK_r05.json   # full contract artifact
@@ -115,20 +118,20 @@ def main() -> None:
             try:
                 if name not in oracles:
                     # rows-only check, mirroring the driver's weaker
-                    # gate — also when the name was EXPLICITLY asked
-                    # for (silently skipping it would read as a green
-                    # oracle check that never ran)
-                    if json_path or name in wanted:
-                        n = fn(spark, SF_DIR).count()
-                        report[name] = {
-                            "rows_match": None,
-                            "schema_match": None,
-                            "hash_match": None,
-                            "spark_rows": n,
-                            "oracle_rows": None,
-                            "err": "no_oracle",
-                        }
-                        print(f"....  {name}: no_oracle, spark_rows={n}")
+                    # gate: the query must run and return rows (an
+                    # empty result is a failure, not a vacuous green)
+                    n = fn(spark, SF_DIR).count()
+                    report[name] = {
+                        "rows_match": None,
+                        "schema_match": None,
+                        "hash_match": None,
+                        "spark_rows": n,
+                        "oracle_rows": None,
+                        "err": "no_oracle" if n else "no_oracle: empty result",
+                    }
+                    print(f"{'....' if n else 'FAIL'}  {name}: no_oracle, spark_rows={n}")
+                    if not n:
+                        failures.append(name)
                     spark.catalog.clearCache()
                     continue
                 sdf = fn(spark, SF_DIR).toPandas()

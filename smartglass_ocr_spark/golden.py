@@ -95,9 +95,11 @@ def process_document(
     """Full golden output for one {doc_id, spans} document: cleaned
     spans in offset order + per-doc derived metadata (FIXTURES.md §2-3).
     ``max_spans``/``max_bytes`` apply :func:`truncate_doc_spans`
-    first (default off — byte-identical to the uncapped spec).
+    first (default off — byte-identical to the uncapped spec). A NULL
+    spans array is an empty document.
     """
-    spans = truncate_doc_spans(doc["spans"], max_spans, max_bytes)
+    spans = truncate_doc_spans(doc["spans"] if doc["spans"] is not None else [],
+                               max_spans, max_bytes)
     return document_metadata(
         doc["doc_id"],
         (
@@ -131,13 +133,11 @@ def document_metadata(doc_id: str, classified: Iterable[tuple]) -> dict:
         s["text"] for s in out_spans if s["text"]
     )
 
-    # NOT wired: the reference's Indonesian pass (lib/smartglass_ocr.py
-    # :596-600) is gated on detect_language(text) == 'ind', a value
-    # its detect_language (lib/text_processing.py:1782-1857) can never
-    # return — like the organize family, `_fix_indonesian_text` is
-    # dead code in the executed reference. It is implemented
-    # (rules/cleanup.fix_indonesian_text) and exposed opt-in only, so
-    # the golden path stays byte-equal to the reference's execution.
+    # No Indonesian pass: the reference gates its pass
+    # (lib/smartglass_ocr.py:663-780) on detect_language(text) == 'ind'
+    # (:596-600), a value its detect_language
+    # (lib/text_processing.py:1782-1857) can never return, so it never
+    # runs there either; COVERAGE.md documents it, not implemented.
 
     # F8 reconstruction stage (ref lib/smartglass_ocr.py:602-604):
     # structure is detected on the INPUT text for dispatch

@@ -152,15 +152,13 @@ def doc_lines(documents: DataFrame, words_per_line: int = 6) -> DataFrame:
 
 
 def paragraph_fold(documents: DataFrame) -> DataFrame:
-    """W3 twin — the ``organize_document_text`` paragraph machine
-    (ref lib/text_processing.py:744-805) as a distributed lag+cumsum
-    fold: a new paragraph starts at doc start, at/after any non-regular
-    line (bullet/heading/empty — the machine flushes around them), or
-    when the previous regular line ended a sentence and the current
-    starts upper/digit (ref :790-796). The byte-exact per-doc machine
-    lives in rules/format.py; this verifies the window formulation the
-    distributed fold relies on. One shuffle on doc_id, reused by the
-    window and the final groupBy."""
+    """W3 — the reference's ``_organize_document_text`` paragraph
+    machine (ref lib/text_processing.py:744-805) as a distributed
+    lag+cumsum fold: a new paragraph starts at doc start, at/after any
+    non-regular line (bullet/heading/empty — the machine flushes around
+    them), or when the previous regular line ended a sentence and the
+    current starts upper/digit (ref :790-796). One shuffle on doc_id,
+    reused by the window and the final groupBy."""
     w = Window.partitionBy("doc_id").orderBy("ln")
     lines = doc_lines(documents)
     prev_kind = F.lag("kind").over(w)

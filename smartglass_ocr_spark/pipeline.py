@@ -15,8 +15,7 @@ is its mega-document variant: heavy docs get their per-span
 classify/clean distributed (:func:`classify_and_clean`) and only the
 per-doc tail (``golden.document_metadata``) runs per doc.
 :func:`extracted_span_rows` is the flat per-span view;
-:func:`with_organized_text` / :func:`with_markdown` append opt-in
-per-doc string columns through one shared ``mapInPandas`` helper.
+:func:`with_markdown` appends the opt-in rendered-report column.
 
 Per-span semantics = ``golden.process_span``, per-doc semantics
 (class-histogram fold included) = ``golden.document_metadata`` — the
@@ -204,7 +203,9 @@ def fused_doc_stage(assembled: DataFrame,
                     max_bytes=max_doc_bytes,
                 )
                 if capped:
-                    row["n_truncated_spans"] = len(spans) - len(row["spans"])
+                    row["n_truncated_spans"] = (
+                        0 if spans is None else len(spans) - len(row["spans"])
+                    )
                 rows.append(row)
             yield pd.DataFrame(rows)
 
@@ -319,37 +320,6 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     return small_out.unionByName(mega_out)
 
 
-def _with_row_column(pipeline_out: DataFrame, name: str, fn) -> DataFrame:
-    """Appends string column *name* = ``fn(row)`` per output row (row
-    as a dict) in one Arrow crossing, off the equality path."""
-
-    def run(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[name] = [fn(row) for row in pdf.to_dict("records")]
-            yield pdf
-
-    schema = StructType(pipeline_out.schema.fields + [StructField(name, StringType())])
-    return pipeline_out.mapInPandas(run, schema)
-
-
-def with_organized_text(pipeline_out: DataFrame) -> DataFrame:
-    """Opt-in ``organize_text`` stage (the reference's dead-code
-    ``_enhance_text_organization`` family, rules/format.py): adds an
-    ``organized_text`` column keyed by each doc's dominant special
-    block class. NOT part of the golden path — the reference never
-    runs it — but exposed for users who want the per-class line
-    machines applied at scale."""
-    from smartglass_ocr_spark.golden import extract_class
-    from smartglass_ocr_spark.rules.format import organize_text
-
-    def organized(row):
-        cls = extract_class(row.get("block_class_hist") or {})
-        return organize_text(row.get("formatted_text") or "", cls)
-
-    return _with_row_column(pipeline_out, "organized_text", organized)
-
-
 def with_markdown(pipeline_out: DataFrame) -> DataFrame:
     """Adds the F14 rendered-report column (rules.markdown) to a
     pipeline output frame. At scale this is the column written to the
@@ -357,7 +327,14 @@ def with_markdown(pipeline_out: DataFrame) -> DataFrame:
     in the results table)."""
     from smartglass_ocr_spark.rules.markdown import render_markdown
 
-    return _with_row_column(pipeline_out, "markdown", render_markdown)
+    def run(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["markdown"] = [render_markdown(row) for row in pdf.to_dict("records")]
+            yield pdf
+
+    schema = StructType(pipeline_out.schema.fields + [StructField("markdown", StringType())])
+    return pipeline_out.mapInPandas(run, schema)
 
 
 def extracted_span_rows(documents: DataFrame | None = None,

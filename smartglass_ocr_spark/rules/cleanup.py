@@ -25,6 +25,12 @@ precompiled regex pipelines. Parity citations (reference file:line):
   we implement the evident intent: digit -> Unicode subscript).
 - ``fix_form``     -> ``lib/text_processing.py:406-460``
 - ``fix_table``    -> ``lib/text_processing.py:462-599``
+
+Not implemented: the reference's Indonesian correction pass
+(``lib/smartglass_ocr.py:663-780``). The reference gates it on
+``detect_language(text) == 'ind'``, a value its ``detect_language``
+never returns, so it never runs; COVERAGE.md documents it, as it
+does the legacy ``clean_text``.
 """
 
 from __future__ import annotations
@@ -488,103 +494,3 @@ def clean_for_class(block_class: str, text: str) -> str:
         text = apply_word_corrections(text)
     return text.strip()
 
-
-# --------------------------------------------------------------------
-# Indonesian doc-level correction pass (ref lib/smartglass_ocr.py:
-# 663-780 `_fix_indonesian_text`). DEAD CODE in the executed
-# reference: the gate at ref :596-600 compares detect_language(text)
-# to 'ind', a value the reference's detect_language
-# (lib/text_processing.py:1782-1857) can never return. Implemented
-# for behavior-complete parity — like the organize family — and
-# exposed as an explicit opt-in only; the golden path does not run it.
-# --------------------------------------------------------------------
-
-# ref :677-715 verbatim, including quirks: 'Tgl' -> 'Tgl.' fires on
-# every standalone Tgl; 'PROVINSI' -> 'PROVINSI' is a no-op; the
-# 'KAB\.'-style keys contain a literal backslash (the reference
-# re.escape()s them, so they only match text containing a backslash —
-# dead in practice, kept for fidelity).
-_INDO_REPLACEMENTS = (
-    ("l<epada", "kepada"), ("l<ami", "kami"), ("l<arena", "karena"),
-    ("bal1wa", "bahwa"), ("adala11", "adalah"), ("dala1n", "dalam"),
-    ("merniliki", "memiliki"), ("rnengenai", "mengenai"),
-    ("dalarn", "dalam"), ("rnasa", "masa"),
-    ("Nornor", "Nomor"), ("nornor", "nomor"), ("Narna", "Nama"),
-    ("narna", "nama"), ("Ternpat", "Tempat"), ("ternpat", "tempat"),
-    ("Tgl", "Tgl."), ("pernerintah", "pemerintah"),
-    ("Provinsl", "Provinsi"), ("Kabupaten/l<ota", "Kabupaten/Kota"),
-    ("Kecarnatan", "Kecamatan"), ("Kelura11an", "Kelurahan"),
-    ("Jenis l<elarnin", "Jenis Kelamin"),
-    ("Golongan Dara11", "Golongan Darah"),
-    ("l<ecarnatan", "Kecamatan"), ("Agarna", "Agama"),
-    ("RT/RVV", "RT/RW"), ("RT /RW", "RT/RW"), ("PROVINSI", "PROVINSI"),
-    ("KAB\\.", "KAB."), ("KEL\\.", "KEL."), ("KEC\\.", "KEC."),
-)
-_INDO_PATTERNS = tuple(
-    (re.compile(r"\b" + re.escape(err) + r"\b"), fix)
-    for err, fix in _INDO_REPLACEMENTS
-)
-_NIK_SEARCH_RX = re.compile(r"(?:NIK|N[l1]K)\s*:?\s*([0-9\s\.,]+)", re.IGNORECASE)
-_NIK_SUB_RX = re.compile(r"(?:NIK|N[l1]K)\s*:?\s*[0-9\s\.,]+", re.IGNORECASE)
-_INDO_DATE_RX = re.compile(r"(\d{1,2})[/\-\.\\](\d{1,2})[/\-\.\\](\d{2,4})")
-_INDO_ADDRESS_RX = re.compile(
-    r"(?:ALAMAT|Alamat)\s*:?\s*(.+?)"
-    r"(?=\n\s*(?:RT/RW|PROVINSI|KABUPATEN|KECAMATAN|KELURAHAN|NIK|AGAMA|\s*$))",
-    re.IGNORECASE | re.DOTALL,
-)
-# ref :768-778: field names are NOT regex-escaped — '.' in 'GOL. DARAH'
-# matches any char and '/' is literal; kept verbatim
-_INDO_ID_FIELDS = (
-    "NAMA", "TEMPAT/TGL LAHIR", "JENIS KELAMIN", "ALAMAT", "AGAMA",
-    "STATUS PERKAWINAN", "PEKERJAAN", "KEWARGANEGARAAN", "BERLAKU HINGGA",
-    "GOL. DARAH", "RT/RW", "KELURAHAN", "KECAMATAN", "PROVINSI", "KABUPATEN",
-)
-_INDO_FIELD_RXS = tuple(
-    re.compile(f"({field})\\s+([^\\n:]+)", re.IGNORECASE)
-    for field in _INDO_ID_FIELDS
-)
-
-
-def fix_indonesian_text(text: str) -> str:
-    """ref lib/smartglass_ocr.py:663-780 in its exact pass order:
-    word replacements -> NIK 16-digit regrouping -> DD-MM-YYYY date
-    normalization -> address whitespace cleanup -> missing colons for
-    KTP field labels."""
-    if not text:
-        return ""
-    for rx, fix in _INDO_PATTERNS:
-        text = rx.sub(fix, text)
-
-    m = _NIK_SEARCH_RX.search(text)
-    if m:
-        digits = "".join(c for c in m.group(1) if c.isdigit())
-        if 15 <= len(digits) <= 17:
-            digits = digits[:16].zfill(16)
-            formatted = " ".join(digits[i : i + 4] for i in range(0, 16, 4))
-            text = _NIK_SUB_RX.sub(f"NIK: {formatted}", text)
-
-    # quirk kept (ref :736-755): str.replace rewrites EVERY substring
-    # occurrence of a matched date, so '11/2/95' containing a match
-    # for '1/2/95' gets corrupted — reference behavior
-    for m in list(_INDO_DATE_RX.finditer(text)):
-        day, month, year = m.groups()
-        d, mo, y = int(day), int(month), int(year)
-        if 1 <= d <= 31 and 1 <= mo <= 12:
-            if y < 100:
-                y = 2000 + y if y < 50 else 1900 + y
-            formatted = f"{day.zfill(2)}-{month.zfill(2)}-{str(y).zfill(4)}"
-            text = text.replace(m.group(0), formatted)
-
-    m = _INDO_ADDRESS_RX.search(text)
-    if m:
-        address = re.sub(r"\s+", " ", m.group(1).strip())
-        # callable replacement: the reference interpolates the OCR'd
-        # address into the replacement STRING (ref :729), which raises
-        # re.error on a backslash in the address and expands literal
-        # group references — deviation: same output whenever the
-        # reference wouldn't crash/corrupt
-        text = _INDO_ADDRESS_RX.sub(lambda _m: f"Alamat: {address}", text)
-
-    for rx in _INDO_FIELD_RXS:
-        text = rx.sub(r"\1: \2", text)
-    return text

@@ -15,12 +15,12 @@ returns two views of that one parse:
   compares with the executed reference (NO flattening caveat).
 
 Parity citations:
-- dispatcher          -> ``lib/information_extraction.py:28-53``
-- ``extract_id_card`` -> ``lib/information_extraction.py:55-134``
-- ``extract_receipt`` -> ``lib/information_extraction.py:136-276``
-- ``extract_form``    -> ``lib/information_extraction.py:278-329``
-- ``extract_table``   -> ``lib/information_extraction.py:331-528``
-- ``extract_generic`` -> ``lib/information_extraction.py:530-562``
+- dispatcher                -> ``lib/information_extraction.py:28-53``
+- ``extract_id_card``       -> ``lib/information_extraction.py:55-134``
+- ``extract_receipt_typed`` -> ``lib/information_extraction.py:136-276``
+- ``extract_form``          -> ``lib/information_extraction.py:278-329``
+- ``extract_table_typed``   -> ``lib/information_extraction.py:331-528``
+- ``extract_generic``       -> ``lib/information_extraction.py:530-562``
 
 Documented deviation: the reference guards values with
 ``not re.match(r'^[:\\-,.;]*', value)`` (``:307``, ``:559``) — that
@@ -129,7 +129,7 @@ def extract_receipt_typed(text: str) -> dict:
     """The reference's NESTED receipt shape (ref lib/
     information_extraction.py:136-276): scalar fields plus
     ``items: [{name, quantity, price}]`` — SURVEY §1.1's promised
-    ``array<struct>``. :func:`extract_receipt` flattens this."""
+    ``array<struct>``. ``_receipt_map`` flattens this."""
     out: dict = {"items": []}
     lines = text.split("\n")
     if lines and lines[0].strip():
@@ -195,14 +195,10 @@ def extract_receipt_typed(text: str) -> dict:
     return out
 
 
-def extract_receipt(text: str) -> dict[str, str]:
+def _receipt_map(typed: dict) -> dict[str, str]:
     """Flattened map view of :func:`extract_receipt_typed`
     (``item_N_*`` keys + ``items_count``) — the stable
     ``map<string,string>`` contract column."""
-    return _receipt_map(extract_receipt_typed(text))
-
-
-def _receipt_map(typed: dict) -> dict[str, str]:
     out = {k: v for k, v in typed.items() if k != "items"}
     for n, item in enumerate(typed["items"]):
         out[f"item_{n}_name"] = item["name"]
@@ -333,13 +329,9 @@ def _table_nested(headers: list[str], rows: list[list[str]]) -> dict:
     return {"headers": headers, "rows": [r for r in row_maps if r]}
 
 
-def extract_table(text: str) -> dict[str, str]:
+def _table_map(headers: list[str], rows: list[list[str]]) -> dict[str, str]:
     """Flattened map view ('|'-joined headers and value rows) — the
     stable ``map<string,string>`` contract column."""
-    return _table_map(*_table_headers_rows(text))
-
-
-def _table_map(headers: list[str], rows: list[list[str]]) -> dict[str, str]:
     out = {"headers": "|".join(headers), "n_rows": str(len(rows))}
     for i, row in enumerate(rows):
         out[f"row_{i}"] = "|".join(row)

@@ -1,6 +1,5 @@
 """F8 text reconstruction stage: ``format_text`` dispatcher + the nine
-structure formatters, the ``organize_*`` machines, and the F11
-response cleanup.
+structure formatters, and the F11 response cleanup.
 
 Reference map (all cited against ``/root/reference``):
 
@@ -14,7 +13,6 @@ Reference map (all cited against ``/root/reference``):
 * ``format_multi_column``             — :1587-1700 (text path)
 * ``format_scientific``               — :1702-1744
 * ``default_formatting``              — :1746-1780
-* ``organize_text`` + ``organize_*``  — :711-1150  (W3/W4 machines)
 * ``clean_response_text``             — lib/utils.py:404-432 (F11)
 
 Two layout-dependent branches are n/a by design: the reference's
@@ -24,14 +22,13 @@ north rule replaces with deterministic parsing — our documents carry
 no bboxes, so ``format_text`` always takes the text-based path, same
 as the reference does when ``layout_info`` lacks those keys.
 
-``organize_text`` parity note: ``_enhance_text_organization`` is DEAD
-CODE in the reference — defined at :711 and never called (verified:
-the only references to it/its ``_organize_*`` callees are inside the
-family itself; ``post_process_text`` dispatches the ``_fix_*`` family
-instead and the live path goes straight to ``format_text``). It is
-implemented here for behavior-complete parity and exposed as an
-explicit opt-in stage, but the golden pipeline — like the reference —
-does not run it.
+Not implemented: ``_enhance_text_organization`` and its six
+``_organize_*`` machines (:711-1150) are dead code in the reference —
+defined and never called (``post_process_text`` dispatches the
+``_fix_*`` family and the live path goes straight to
+``format_text``) — so they are documented in COVERAGE.md only. The
+W3 paragraph machine's grouping survives as the Spark query
+``ops/windows.paragraph_fold``.
 
 Fidelity quirks reproduced on purpose (each marked inline):
 
@@ -49,7 +46,6 @@ Fidelity quirks reproduced on purpose (each marked inline):
 from __future__ import annotations
 
 import re
-import string
 
 from smartglass_ocr_spark.rules.structure import detect_structure
 
@@ -381,299 +377,6 @@ def format_text(text: str, structure: str | None = None) -> str:
         structure = detect_structure(text)
     formatted = _FORMATTERS.get(structure, default_formatting)(text)
     return _UNWANTED_RX.sub("", formatted).strip()
-
-
-# ---------------------------------------------- organize family (dead) --
-
-_ORG_LIST_RX = re.compile(r"^\d+[\.\)]")                      # ref :769
-_ORG_ALLCAPS_RX = re.compile(r"^[A-Z][A-Z\s]+:?")             # ref :775
-_ORG_LABEL_RX = re.compile(r"^[A-Z][A-Za-z\s]+:")             # ref :775
-
-
-def organize_document_text(text: str) -> str:
-    """W3 paragraph machine — ref :744-805. Breaks before list items,
-    headings/labels, and short unpunctuated lines; a regular line
-    starts a new paragraph when it begins upper/digit and the previous
-    accumulated line ended a sentence."""
-    out: list[str] = []
-    cur: list[str] = []
-
-    def flush() -> None:
-        if cur:
-            out.append(" ".join(cur))
-            cur.clear()
-
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line:
-            flush()
-            out.append("")
-        elif (
-            line.startswith("•")
-            or line.startswith("-")
-            or _ORG_LIST_RX.match(line)
-        ):
-            flush()
-            out.append(line)
-        elif _ORG_ALLCAPS_RX.match(line) or _ORG_LABEL_RX.match(line):
-            flush()
-            out.append(line)
-        elif len(line) < 40 and not line.endswith((".", "?", "!")):
-            flush()
-            out.append(line)
-        else:
-            if (
-                cur
-                and (line[0].isupper() or line[0].isdigit())
-                and cur[-1].endswith((".", "!", "?"))
-            ):
-                flush()
-                cur.append(line)
-            else:
-                cur.append(line)
-    flush()
-    return "\n".join(out)
-
-
-def organize_form_text(text: str) -> str:
-    """ref :807-848 — same field normalization as :func:`format_form`
-    but re-emits matched colon rows re-joined as ``Label: Value``."""
-    out: list[str] = []
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line:
-            out.append("")
-            continue
-        m = _FORM_FIELD_COLON_RX.match(line)
-        if m:
-            out.append(f"{m.group(1).strip()}: {m.group(2).strip()}")
-            continue
-        m = _FORM_FIELD_GAP_RX.match(line)
-        if m:
-            out.append(f"{m.group(1).strip()}: {m.group(2).strip()}")
-        else:
-            out.append(line)
-    return "\n".join(out)
-
-
-_RCPT_ITEMS_START_RX = re.compile(
-    r"^ITEM|^DESCRIPTION|^QTY|PRICE|^-+", re.IGNORECASE
-)  # ref :881
-_RCPT_RULE_RX = re.compile(r"^={5,}")                          # ref :882
-_RCPT_TOTALS_RX = re.compile(r"^SUBTOTAL|^TAX|^TOTAL|^={5,}", re.IGNORECASE)
-_RCPT_FOOTER_RX = re.compile(
-    r"^THANK|^RETURN|^EXCHANGE|^POLICY|^RECEIPT", re.IGNORECASE
-)  # ref :895
-
-
-def organize_receipt_text(text: str) -> str:
-    """W4 receipt section machine — ref :850-930. header -> items ->
-    totals -> footer, with the items-start delimiter line consumed."""
-    header: list[str] = []
-    items: list[str] = []
-    totals: list[str] = []
-    footer: list[str] = []
-    section = "header"
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line:
-            continue
-        if section == "header" and (
-            _RCPT_ITEMS_START_RX.match(line) or _RCPT_RULE_RX.match(line)
-        ):
-            section = "items"
-            continue
-        if section == "items" and _RCPT_TOTALS_RX.match(line):
-            section = "totals"
-        if section == "totals" and _RCPT_FOOTER_RX.match(line):
-            section = "footer"
-        {"header": header, "items": items, "totals": totals, "footer": footer}[
-            section
-        ].append(line)
-
-    out: list[str] = []
-    if header:
-        out.extend(header)
-        out.append("")
-    if items:
-        out.append("ITEMS:")
-        out.extend("  " + ln for ln in items)
-        out.append("")
-    if totals:
-        out.append("TOTALS:")
-        out.extend(totals)
-        out.append("")
-    if footer:
-        out.extend(footer)
-    return "\n".join(out)
-
-
-_ID_FIELDS = (
-    "NAME", "ADDRESS", "DATE OF BIRTH", "DOB", "EXPIRATION DATE", "SEX",
-    "GENDER", "HEIGHT", "WEIGHT", "EYES", "HAIR", "DRIVER'S LICENSE",
-    "ISSUE DATE", "PLACE OF BIRTH", "NATIONALITY", "RELIGION",
-    "MARITAL STATUS", "BLOOD TYPE", "OCCUPATION", "ID NUMBER", "SIGNATURE",
-)  # ref :947-952
-_ID_FIELD_ORDER = (
-    "ADDRESS", "DATE OF BIRTH", "DOB", "PLACE OF BIRTH", "SEX", "GENDER",
-    "HEIGHT", "WEIGHT", "EYES", "HAIR", "BLOOD TYPE", "NATIONALITY",
-    "RELIGION", "MARITAL STATUS", "OCCUPATION", "ISSUE DATE",
-    "EXPIRATION DATE",
-)  # ref :996-1001
-
-
-def organize_id_card_text(text: str) -> str:
-    """ref :932-1012 — harvest known ID fields into a dict (first the
-    anchored ``FIELD: value`` match, else a split on the field name
-    anywhere in the line), then emit NAME, the id number, the fixed
-    field order, and any leftovers in insertion order."""
-    field_values: dict[str, str] = {}
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line:
-            continue
-        matched = None
-        for field in _ID_FIELDS:
-            m = re.match(
-                f"^{re.escape(field)}\\s*:?\\s*(.+)", line, re.IGNORECASE
-            )
-            if m:
-                matched = (field, m.group(1).strip())
-                break
-        if matched:
-            field_values[matched[0].upper()] = matched[1]
-        else:
-            for field in _ID_FIELDS:
-                if field.upper() in line.upper():
-                    parts = re.split(re.escape(field), line, flags=re.IGNORECASE)
-                    if len(parts) > 1 and parts[1].strip():
-                        field_values[field.upper()] = parts[1].strip()
-                        break
-
-    out: list[str] = []
-    if "NAME" in field_values:
-        out.append(f"NAME: {field_values['NAME']}")
-    for field in ("ID NUMBER", "DRIVER'S LICENSE"):
-        if field in field_values:
-            out.append(f"{field}: {field_values[field]}")
-            break
-    for field in _ID_FIELD_ORDER:
-        if field in field_values:
-            out.append(f"{field}: {field_values[field]}")
-    leading = ("NAME", "ID NUMBER", "DRIVER'S LICENSE") + _ID_FIELD_ORDER
-    for field, value in field_values.items():
-        if field not in leading:
-            out.append(f"{field}: {value}")
-    return "\n".join(out)
-
-
-def organize_table_text(text: str) -> str:
-    """W8 twin — ref :1014-1119. Pipe rows get normalized delimiters +
-    a ``---`` separator after the header; otherwise whitespace-column
-    boundaries are inferred from the first five lines and pipes
-    inserted; else lines are stripped."""
-    lines = text.split("\n")
-    out: list[str] = []
-
-    if any("|" in ln for ln in lines):
-        for i, raw in enumerate(lines):
-            if not raw.strip():
-                out.append("")
-                continue
-            line = re.sub(r"\s*\|\s*", " | ", raw.strip())
-            if not line.startswith("|"):
-                line = "| " + line
-            if not line.endswith("|"):
-                line = line + " |"
-            out.append(line)
-            if i == 0 and len(lines) > 1:
-                nxt = lines[1].strip()
-                if not nxt.startswith("--") and not nxt.startswith("=="):
-                    columns = line.count("|") - 1
-                    out.append("|" + "|".join(" --- " for _ in range(columns)) + "|")
-        return "\n".join(out)
-
-    if len(lines) > 2:
-        whitespace_cols: list[tuple[int, int]] = []
-        for line in lines[:5]:
-            if not line.strip():
-                continue
-            prev_char = ""
-            col_start = -1
-            for i, char in enumerate(line):
-                if char.isspace() and prev_char not in string.whitespace:
-                    col_start = i
-                elif (
-                    not char.isspace()
-                    and prev_char in string.whitespace
-                    and col_start >= 0
-                ):
-                    if i - col_start >= 2:
-                        whitespace_cols.append((col_start, i))
-                    col_start = -1
-                prev_char = char
-        if whitespace_cols:
-            boundaries: list[int] = []
-            for start, _end in sorted(whitespace_cols, key=lambda x: x[0]):
-                if not boundaries or start > boundaries[-1] + 3:
-                    boundaries.append(start)
-            if boundaries:
-                for line in lines:
-                    if not line.strip():
-                        out.append("")
-                        continue
-                    new_line = "| "
-                    last_pos = 0
-                    for boundary in boundaries:
-                        if boundary < len(line):
-                            new_line += line[last_pos:boundary].strip() + " | "
-                            last_pos = boundary
-                    if last_pos < len(line):
-                        new_line += line[last_pos:].strip() + " |"
-                    out.append(new_line)
-                if out:
-                    columns = out[0].count("|") - 1
-                    out.insert(
-                        1, "|" + "|".join(" --- " for _ in range(columns)) + "|"
-                    )
-                return "\n".join(out)
-
-    return "\n".join(ln.strip() for ln in lines)
-
-
-def default_text_organization(text: str) -> str:
-    """ref :1121-1150 — strip lines, collapse runs of blank lines."""
-    out: list[str] = []
-    prev_empty = False
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line:
-            if not prev_empty:
-                out.append("")
-                prev_empty = True
-        else:
-            out.append(line)
-            prev_empty = False
-    return "\n".join(out)
-
-
-_ORGANIZERS = {
-    # ImageType.DOCUMENT / BOOK_PAGE -> document machine (ref :723-725)
-    "content": organize_document_text,
-    "heading": organize_document_text,
-    "form": organize_form_text,
-    "receipt": organize_receipt_text,
-    "id_card": organize_id_card_text,
-    "table": organize_table_text,
-}
-
-
-def organize_text(text: str, block_class: str = "content") -> str:
-    """``_enhance_text_organization`` analogue — ref :711-742, keyed by
-    our block classes instead of ``ImageType``. Dead code in the
-    reference (see module docstring); exposed as an explicit opt-in
-    stage only."""
-    return _ORGANIZERS.get(block_class, default_text_organization)(text)
 
 
 # --------------------------------------------------------------- F11 --

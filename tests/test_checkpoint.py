@@ -111,6 +111,32 @@ def test_resume_keeps_session_overwrite_mode(spark, paths):
         spark.conf.set(key, before)
 
 
+@pytest.mark.parametrize("cap", [None, 1])
+def test_null_spans_row_is_an_empty_document(spark, paths, cap):
+    """A NULL spans array is processed like ``[]``: the job completes
+    and both rows come back as empty ``poor_quality`` documents, with
+    or without the span cap."""
+    from smartglass_ocr_spark.corpus import DOCS_SCHEMA
+
+    spans = [
+        ("para", "The quarterly report covers revenue and costs.", None, 0),
+        ("para", "Margins improved in every region this year.", None, 1),
+    ]
+    docs = spark.createDataFrame([("a", spans), ("b", None), ("c", [])], DOCS_SCHEMA)
+    r = run_extraction_job(
+        spark, docs, paths["out"], paths["ckpt"], paths["metrics"], "run-1",
+        n_partitions=2, max_doc_spans=cap,
+    )
+    assert r["n_docs"] == 3
+    out = {row["doc_id"]: row for row in spark.read.parquet(paths["out"]).collect()}
+    assert len(out["a"]["spans"]) == (cap or 2)
+    for doc_id in ("b", "c"):
+        assert out[doc_id]["spans"] == []
+        assert out[doc_id]["status"] == "poor_quality"
+        if cap:
+            assert out[doc_id]["n_truncated_spans"] == 0
+
+
 def test_checkpoint_and_metrics_schema(spark, paths):
     docs = docs_to_df(spark, generate_docs(n_docs=10, seed=3))
     run_extraction_job(

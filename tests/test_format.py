@@ -1,9 +1,9 @@
-"""F8 reconstruction stage (rules/format.py) — formatter bodies,
-organize machines, and the F11 response cleanup.
+"""F8 reconstruction stage (rules/format.py) — formatter bodies and
+the F11 response cleanup.
 
-Reference behaviors asserted against lib/text_processing.py:711-1150
-(organize family), :1152-1210 (dispatcher), :1261-1780 (formatters),
-and lib/utils.py:404-432 (clean_response_text).
+Reference behaviors asserted against lib/text_processing.py:1152-1210
+(dispatcher), :1261-1780 (formatters), and lib/utils.py:404-432
+(clean_response_text).
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from smartglass_ocr_spark.golden import golden_outputs
 from smartglass_ocr_spark.rules.format import (
     clean_response_text,
     default_formatting,
-    default_text_organization,
     format_bullet_points,
     format_form,
     format_headers_and_content,
@@ -25,11 +24,6 @@ from smartglass_ocr_spark.rules.format import (
     format_scientific,
     format_table,
     format_text,
-    organize_document_text,
-    organize_id_card_text,
-    organize_receipt_text,
-    organize_table_text,
-    organize_text,
 )
 from smartglass_ocr_spark.rules.structure import detect_structure
 
@@ -180,66 +174,6 @@ def test_downstream_consumes_formatted_text():
             assert out["status"] in ("success", "partial_success")
         # reported structure re-detected on formatted text (ref :1222)
         assert out["structure"] == detect_structure(out["formatted_text"])
-
-
-# ---- organize family (reference dead code, implemented for parity) --
-
-def test_organize_document_text_w3_machine():
-    text = (
-        "First sentence of para.\n"
-        "it continues on this line which is long enough to be regular text.\n"
-        "Next sentence starts new para because prior ended with period ok.\n"
-        "\n"
-        "- a list item\n"
-        "HEADING LINE\n"
-        "Short line"
-    )
-    out = organize_document_text(text).split("\n")
-    # para break after punctuation + capital start (ref :790-796)
-    assert any(
-        ln.startswith("Next sentence starts new para") for ln in out
-    )
-    assert "- a list item" in out
-    assert "HEADING LINE" in out
-    assert "Short line" in out  # <40 chars, no terminal punctuation
-
-
-def test_organize_receipt_sections():
-    text = (
-        "MegaMart\n123 Main St\n"
-        "ITEM\n"
-        "apple 1.00\nbread 2.50\n"
-        "SUBTOTAL 3.50\nTOTAL 3.50\n"
-        "THANK YOU\n"
-    )
-    out = organize_receipt_text(text)
-    assert "ITEMS:" in out and "  apple 1.00" in out
-    assert "TOTALS:" in out and "TOTAL 3.50" in out
-    assert out.startswith("MegaMart")
-    assert out.rstrip().endswith("THANK YOU")
-
-
-def test_organize_id_card_field_harvest_and_order():
-    text = "SEX M\nNAME: Jane Roe\nID NUMBER 12345\nADDRESS: 1 Elm St"
-    out = organize_id_card_text(text).split("\n")
-    assert out[0] == "NAME: Jane Roe"
-    assert out[1] == "ID NUMBER: 12345"
-    assert out[2] == "ADDRESS: 1 Elm St"   # fixed order: ADDRESS before SEX
-    assert out[3] == "SEX: M"
-
-
-def test_organize_table_pipe_normalization():
-    out = organize_table_text("a|b\n1|2").split("\n")
-    assert out[0] == "| a | b |"
-    assert out[1] == "| --- | --- |"
-    assert out[2] == "| 1 | 2 |"
-
-
-def test_organize_dispatch_and_default():
-    assert organize_text("a\n\n\n\nb", "unknown_class") == "a\n\nb"
-    assert default_text_organization("x\n\n\n\ny") == "x\n\ny"
-    # content routes to the document machine
-    assert organize_text("TITLE\nbody", "content") == "TITLE\nbody"
 
 
 # ---- F11 response cleanup ------------------------------------------

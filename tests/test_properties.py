@@ -101,7 +101,7 @@ def test_process_document_invariants(spans):
     assert process_document(doc2) == out
 
 
-# ---- F8 format/organize total-function properties ------------------
+# ---- F8 format total-function properties ---------------------------
 
 _FMT_TEXT = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
@@ -125,17 +125,6 @@ def test_format_text_total_and_charset(text, structure):
     assert re.search(r"[^\w\s.!?,;:()\"'•\-\n]", out) is None
 
 
-@given(text=_FMT_TEXT, cls=st.sampled_from(
-    ["content", "form", "receipt", "id_card", "table", "anything"]))
-@settings(max_examples=150, deadline=None)
-def test_organize_text_total(text, cls):
-    """Every organize machine is total over arbitrary unicode."""
-    from smartglass_ocr_spark.rules.format import organize_text
-
-    out = organize_text(text, cls)
-    assert isinstance(out, str)
-
-
 @given(text=_FMT_TEXT)
 @settings(max_examples=100, deadline=None)
 def test_clean_response_text_properties(text):
@@ -154,14 +143,6 @@ def test_clean_response_backslash_double_space_quirk():
     from smartglass_ocr_spark.rules.format import clean_response_text
 
     assert clean_response_text("a \\ b") == "a  b"  # ref pass order
-
-
-@given(text=_FMT_TEXT)
-@settings(max_examples=100, deadline=None)
-def test_fix_indonesian_total(text):
-    from smartglass_ocr_spark.rules.cleanup import fix_indonesian_text
-
-    assert isinstance(fix_indonesian_text(text), str)
 
 
 @given(text=st.text(alphabet="ab C1_ \n|:.,-", max_size=80))

@@ -94,22 +94,6 @@ def test_format_text_matches_reference(ref_tp, corpus_texts):
         assert format_text(t) == ref_tp.format_text(t, {}), t[:80]
 
 
-def test_organize_machines_match_reference(ref_tp, corpus_texts):
-    from smartglass_ocr_spark.rules import format as fmt
-
-    pairs = [
-        (fmt.organize_document_text, ref_tp._organize_document_text),
-        (fmt.organize_form_text, ref_tp._organize_form_text),
-        (fmt.organize_receipt_text, ref_tp._organize_receipt_text),
-        (fmt.organize_id_card_text, ref_tp._organize_id_card_text),
-        (fmt.organize_table_text, ref_tp._organize_table_text),
-        (fmt.default_text_organization, ref_tp._default_text_organization),
-    ]
-    for t in corpus_texts:
-        for ours, theirs in pairs:
-            assert ours(t) == theirs(t), (ours.__name__, t[:80])
-
-
 def test_clean_response_text_matches_reference(ref_tp, corpus_texts):
     from lib.utils import clean_response_text as ref_clean
 
@@ -131,8 +115,8 @@ def test_cleanup_matches_reference_per_class(ref_tp):
     The 'document' comparison runs against the general pipeline only:
     our 'content' class additionally applies the F2 word-correction
     dictionary (ref :601-709 ``_apply_general_text_corrections``),
-    which — like the organize family — the reference DEFINES but never
-    calls; SURVEY §2 maps it into the cleanup stage deliberately."""
+    which the reference DEFINES but never calls; SURVEY §2 maps it
+    into the cleanup stage deliberately."""
     from smartglass_ocr_spark.corpus import generate_docs
     from smartglass_ocr_spark.rules.cleanup import clean_for_class, general_cleanup
 

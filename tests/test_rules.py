@@ -20,8 +20,7 @@ from smartglass_ocr_spark.rules.confidence import status_for, weighted_confidenc
 from smartglass_ocr_spark.rules.extract import (
     extract_form,
     extract_generic,
-    extract_receipt,
-    extract_table,
+    extract_structured,
 )
 from smartglass_ocr_spark.rules.langdetect import detect_language
 from smartglass_ocr_spark.rules.structure import detect_structure
@@ -267,7 +266,7 @@ def test_status_thresholds():
 
 def test_extract_receipt_fields_and_items():
     text = "MART STORE\nDATE: 12/3/2024\nITEMS\ncoffee 2 4.50\nbread 2.25\nTOTAL 9.00\nCASH"
-    out = extract_receipt(text)
+    out = extract_structured("receipt", text)[0]
     assert out["merchant"] == "MART STORE"
     assert out["date"] == "12/3/2024"
     assert out["total"] == "9.00"
@@ -284,7 +283,7 @@ def test_extract_form_special_patterns():
 
 
 def test_extract_table_delimited():
-    out = extract_table("Name | Qty\nfoo | 2\nbar | 3")
+    out = extract_structured("table", "Name | Qty\nfoo | 2\nbar | 3")[0]
     assert out["headers"] == "Name|Qty"
     assert out["n_rows"] == "2"
     assert out["row_0"] == "foo|2"
@@ -310,38 +309,14 @@ def test_clean_for_class_dispatch():
     assert clean_for_class("content", "") == ""
 
 
-# ---- Indonesian correction pass (ref lib/smartglass_ocr.py:663-780)
-
-
-def test_fix_indonesian_replacements_and_nik():
-    from smartglass_ocr_spark.rules.cleanup import fix_indonesian_text
-
-    out = fix_indonesian_text("Narna Budi dalarn rnasa l<arena bal1wa")
-    # replacements applied; the KTP field-colon pass then labels NAMA
-    assert out == "Nama: Budi dalam masa karena bahwa"
-    # NIK regrouped to 4x4 digits; 15-digit input zero-padded to 16
-    out = fix_indonesian_text("NIK : 123456789012345")
-    assert "NIK: 0123 4567 8901 2345" in out
-    # 18+ digits: left untouched (outside the 15..17 window)
-    out = fix_indonesian_text("NIK 123456789012345678")
-    assert out == "NIK 123456789012345678"
-
-
-def test_fix_indonesian_dates_and_field_colons():
-    from smartglass_ocr_spark.rules.cleanup import fix_indonesian_text
-
-    assert "01-02-1995" in fix_indonesian_text("lahir 1/2/95 x")
-    assert "05-06-2003" in fix_indonesian_text("tgl 5.6.03 x")
-    # invalid month keeps original
-    assert "13/13/99" in fix_indonesian_text("on 13/13/99 x")
-    out = fix_indonesian_text("AGAMA ISLAM\nPEKERJAAN Guru")
-    assert "AGAMA: ISLAM" in out and "PEKERJAAN: Guru" in out
+# ---- Indonesian pass (ref lib/smartglass_ocr.py:663-780, never run)
 
 
 def test_golden_does_not_apply_indonesian_fix():
     """The reference's Indonesian pass is dead code (its gate compares
     detect_language to 'ind', a value it never returns) — the golden
-    path must NOT run it; it is opt-in only."""
+    path must NOT run it either (COVERAGE.md: documented, not
+    implemented)."""
     from smartglass_ocr_spark.golden import process_document
 
     spans = [
@@ -352,15 +327,6 @@ def test_golden_does_not_apply_indonesian_fix():
     ]
     out = process_document({"doc_id": "d", "spans": spans})
     assert "Narna" in out["formatted_text"] and "dalarn" in out["formatted_text"]
-
-
-def test_fix_indonesian_address_with_backslash_does_not_crash():
-    from smartglass_ocr_spark.rules.cleanup import fix_indonesian_text
-
-    # the reference would raise re.error here (replacement-string
-    # interpolation); our callable replacement is the documented fix
-    out = fix_indonesian_text("ALAMAT: Jl. Kenanga \\jakarta\nNIK 1")
-    assert "Alamat: Jl. Kenanga \\jakarta" in out
 
 
 # ---- summary styles (ref lib/text_processing.py:2121-2242) ---------

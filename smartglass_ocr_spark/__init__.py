@@ -26,6 +26,13 @@ Layout:
 - ``ops/``      training-data-scale operators: dedup (exact/minhash/
                 simhash/jaccard), similarity search, text stats.
 - ``checkpoint`` per-partition lineage/metrics + idempotent resume.
+- ``zipcache``  per-worker guard on the zip-directory re-read that
+                every Python task's set-up triggers; installed here, on
+                the package's first import inside a Spark task.
 """
 
+from smartglass_ocr_spark import zipcache
+
 __version__ = "0.1.0"
+
+zipcache.install_in_worker()

@@ -360,6 +360,17 @@ _FORM_LABELS = [
     (re.compile(r"\b(?:S|s)ignature\b"), "Signature"),
     (re.compile(r"\b(?:D|d)ate\b"), "Date"),
 ]
+# label: value colon insertion, then newline after each field
+# (ref :443-458), per canonical label. Each pattern starts with its
+# literal, so a text without the literal is left as it is.
+_FORM_COLON_RXS = [
+    (label, re.compile(f"({re.escape(label)})\\s+([^:\\n]+)"))
+    for _, label in _FORM_LABELS
+]
+_FORM_BREAK_RXS = [
+    (label + ":", re.compile(f"({re.escape(label)}:\\s+[^\\n]+)([^\\n])"))
+    for _, label in _FORM_LABELS
+]
 _CHECKED_BOX_RX = re.compile(r"\[\s*[xX✓✔]\s*\]")
 _EMPTY_BOX_RX = re.compile(r"\[\s*\]")
 
@@ -367,15 +378,14 @@ _EMPTY_BOX_RX = re.compile(r"\[\s*\]")
 def fix_form(text: str) -> str:
     for rx, rep in _FORM_LABELS:
         text = rx.sub(rep, text)
-    # label: value colon insertion, then newline after each field
-    # (ref :443-458) — iterate over canonical label strings.
-    canon = dict.fromkeys(rep for _, rep in _FORM_LABELS)
-    for label in canon:
-        text = re.sub(f"({re.escape(label)})\\s+([^:\\n]+)", r"\1: \2", text)
+    for literal, rx in _FORM_COLON_RXS:
+        if literal in text:
+            text = rx.sub(r"\1: \2", text)
     text = _CHECKED_BOX_RX.sub("☑", text)
     text = _EMPTY_BOX_RX.sub("☐", text)
-    for label in canon:
-        text = re.sub(f"({re.escape(label)}:\\s+[^\\n]+)([^\\n])", r"\1\n\2", text)
+    for literal, rx in _FORM_BREAK_RXS:
+        if literal in text:
+            text = rx.sub(r"\1\n\2", text)
     return text
 
 
